@@ -12,9 +12,11 @@ cluster runs the same code against partitioned tables.
 Verb → reference mapping:
   remember_batch   remember.rs:67-270   (validate, hash, embed, TTL,
                                          chain assignment W7)
-  recall           recall.rs:332-737    (P1 filters, lanes, RRF A1,
-                                         top-k W1; strategies exact/
-                                         lexical/semantic/hybrid)
+  recall_batch     recall.rs:332-737    (P1 filters, lanes, RRF A1,
+                                         per-query top-k; strategies
+                                         exact/lexical/semantic/
+                                         hybrid/graph)
+  recall           recall_batch over a one-row query frame
   forget           forget.rs:14-120     (soft/hard/archive/redact —
                                          redact preserves hashes)
   share / visible_to  share.rs, J1      (ACL left-semi visibility)
@@ -46,15 +48,12 @@ from pyspark.sql.types import (
 
 from mnemo_spark.functions.embedder import token_bucket
 from mnemo_spark.functions.text import tokens
-from mnemo_spark.io import local_frame, localize_small
-from mnemo_spark.operators.bm25 import bm25_score
+from mnemo_spark.io import local_frame, local_relation, localize_small
 from mnemo_spark.operators.chain import (
     assign_chain,
     assign_chain_auto,
     verify_chain,
 )
-from mnemo_spark.operators.rrf import rrf_fuse
-from mnemo_spark.operators.window_ops import top_k_ranked
 
 AGENT_ID_RE = r"^[A-Za-z0-9._-]{1,256}$"  # P7, query/mod.rs:42-61
 
@@ -795,14 +794,14 @@ class MnemoSparkEngine:
         domain_scope: dict | None,
         reasoning_trust: dict | None,
     ):
-        """Shared pre-scoring candidate pipeline for recall verbs:
-        visibility (J1) → plan-tier exclusion (P5) → domain scope (P3)
-        → reasoning-trust policy (P4). Returns (corpus, rt_admitted)
-        where rt_admitted is the down-weight predicate (None unless
-        action=down_weight) — recall and recall_batch compose the
-        IDENTICAL policy surface, so a batched query can never see a
-        record its single-query twin would not (the reference's
-        permission-safe-ANN contract, integration_test.rs:2130)."""
+        """Pre-scoring candidate pipeline of recall_batch (and so of
+        recall, its one-query form): visibility (J1) → plan-tier
+        exclusion (P5) → domain scope (P3) → reasoning-trust policy
+        (P4). Returns (corpus, rt_admitted) where rt_admitted is the
+        down-weight predicate (None unless action=down_weight). Every
+        lane scores only this corpus, so no query can see a record its
+        principal could not (the reference's permission-safe-ANN
+        contract, integration_test.rs:2130)."""
         corpus = self.visible_to(principal, now=now).filter(
             # P5: experience-tier plan records never surface in ordinary
             # recall — replayed only via recall_plan (recall.rs:1131-1149)
@@ -845,205 +844,27 @@ class MnemoSparkEngine:
         lane_limit=AUTO_LANE_LIMIT,
         ann: str = "auto",
     ) -> DataFrame:
-        """→ (id, agent_id, content, score, rank). Permission filter
-        runs BEFORE scoring (the reference's filtered_search contract:
-        permission-safe ANN, SURVEY §4).
-
-        lane_limit: per-lane candidate over-fetch feeding RRF fusion.
-        Default AUTO = k * RECALL_LANE_OVERFETCH — the reference's
-        limit*3 (recall.rs:397), which bounds fusion input to
-        O(lanes·3k) instead of O(corpus) per lane (the 100-TB shape;
-        r9 flips this to the default, VERDICT r8 #6). Pass None for
-        full-lane fusion — the exactness mode where every corpus row
-        contributes its reciprocal-rank term.
-
-        domain_scope (P3, retrieval.rs:154-174 DomainScope / the
-        v0.4.15 anti-dilution mode): {"namespace": str, "doc_class":
-        str, "tags": [..]} — restricts the candidate set BEFORE any
-        similarity step, so off-domain-but-semantically-similar
-        records cannot dilute the top-k. namespace/doc_class match the
-        metadata JSON; tags must ALL be present. Being a pre-scoring
-        column predicate, Catalyst pushes it into the scan — at 100 TB
-        the domain filter prunes partitions instead of post-filtering
-        a diluted candidate list.
-
-        ann: dense-lane execution mode ('auto'|'exact'|'ivf'), same
-        contract and default as recall_batch — see its docstring.
-
-        reasoning_trust (v0.5.17 forged-reasoning defense,
-        retrieval.rs:216-430 ReasoningTrustPolicy): opt-in
-        {"action": "quarantine"|"down_weight",
-         "trusted": [authorship...], "down_weight_factor": f}.
-        An entry is admitted iff
-        metadata.reasoning_provenance.authorship is in `trusted`
-        (default: model_authored / user_provided / tool_verified);
-        absent or unparseable provenance reads as 'unverified' — the
-        reference's FAIL-CLOSED default (an entry that never declared
-        how its reasoning was produced cannot pass as
-        "already-reasoned"). quarantine excludes pre-scoring;
-        down_weight multiplies the final score (default x0.1) and
-        re-ranks. None keeps the read path unchanged; composes with
-        every strategy."""
-        corpus, rt_admitted = self._recall_corpus(
-            principal, now, domain_scope, reasoning_trust
+        """→ (id, agent_id, content, score, rank) for ONE query. It is
+        `recall_batch` over a one-row query frame, without the
+        query_id column: every strategy, policy knob and default is
+        the batch verb's — see its docstring."""
+        q = local_relation(
+            self.spark, [("q0", query)], "query_id string, query string"
         )
-        if lane_limit is AUTO_LANE_LIMIT:
-            lane_limit = k * RECALL_LANE_OVERFETCH
-        # legacy strategy-string aliases (retrieval.rs to_strategy_str):
-        # "auto" is the reference's wire name for the hybrid RRF path;
-        # "domain_scoped" (v0.4.15 DomainScoped mode) = restrict to the
-        # metadata sub-corpus, then a SINGLE vector pass — degrading
-        # gracefully to plain vector when no predicate was given
-        if strategy == "auto":
-            strategy = "hybrid"
-        elif strategy == "domain_scoped":
-            strategy = "semantic"
-        if strategy == "exact":
-            hits = corpus.filter(F.col("content") == query).withColumn(
-                "score", F.lit(1.0)
-            )
-        elif strategy == "lexical":
-            hits = (
-                bm25_score(corpus, query.lower().split(), id_col="id", text_col="content")
-                .withColumnRenamed("bm25", "score")
-                .join(corpus, "id")
-            )
-        elif strategy in ("semantic", "hybrid", "graph"):
-            # U1 fail-loud gate (embedding/mod.rs:7-53, enforced at
-            # recall.rs:366-375): semantic retrieval under a provider
-            # that can't embed must refuse, not silently degrade —
-            # graph mode seeds from the semantic lane, so it gates too
-            if not getattr(self.embedder, "semantic", False):
-                raise RuntimeError(
-                    f"recall(strategy={strategy!r}) requires a semantic-"
-                    f"capable embedder; configured provider "
-                    f"{getattr(self.embedder, 'name', type(self.embedder).__name__)!r} "
-                    "cannot embed (reference fail-loud contract)"
-                )
-            # per-strategy lane pruning (margin-safe — see
-            # batch_dot_scores): graph consumes only the k*3 seed
-            # over-fetch; plain semantic only the final top-k UNLESS a
-            # down-weight pass can promote arbitrary ranks; hybrid only
-            # each lane's top-lane_limit (None = full-lane exactness)
-            if strategy == "graph":
-                sem_limit = k * 3
-            elif strategy == "semantic":
-                sem_limit = None if rt_admitted is not None else k
-            else:
-                sem_limit = lane_limit
-            sem = self._semantic_lane(corpus, query, limit=sem_limit, ann=ann)
-            if strategy == "graph":
-                hits = self._graph_recall(
-                    corpus, sem, edges, k, rrf_k, weights, lane_limit=lane_limit
-                )
-            elif strategy == "semantic":
-                hits = sem.join(corpus, "id")
-            else:
-                now_c = F.lit(now).cast("timestamp") if now is not None else F.current_timestamp()
-                recency = corpus.select(
-                    "id",
-                    F.pow(
-                        F.lit(2.0),
-                        -(
-                            (F.unix_micros(now_c) - F.unix_micros(F.col("created_at")))
-                            / F.lit(3.6e9)
-                        )
-                        / F.lit(168.0),
-                    ).alias("score"),
-                )
-                lex = bm25_score(
-                    corpus, query.lower().split(), id_col="id", text_col="content"
-                ).withColumnRenamed("bm25", "score")
-                fused = rrf_fuse(
-                    {"semantic": sem.withColumnRenamed("score", "score"),
-                     "lexical": lex, "recency": recency},
-                    weights or {"semantic": 6.0, "lexical": 3.0, "recency": 1.0},
-                    rrf_k,
-                    id_col="id",
-                    lane_limit=lane_limit,
-                )
-                hits = fused.withColumnRenamed("rrf_score", "score").join(corpus, "id")
-        else:
-            raise ValueError(f"unknown strategy {strategy!r}")
-
-        if rt_admitted is not None:
-            # DownWeight action (ReasoningTrustPolicy::rerank):
-            # untrusted hits keep their row, score x factor, re-ranked
-            factor = float(reasoning_trust.get("down_weight_factor", 0.1))
-            hits = hits.withColumn(
-                "score",
-                F.when(rt_admitted, F.col("score")).otherwise(
-                    F.col("score") * factor
-                ),
-            )
-        return top_k_ranked(hits, [F.desc("score"), F.asc("id")], k).select(
-            "id", "agent_id", "content", F.round("score", 6).alias("score"), "rank"
-        )
-
-    def _graph_recall(
-        self,
-        corpus: DataFrame,
-        sem: DataFrame,
-        edges: DataFrame | None,
-        k: int,
-        rrf_k: int,
-        weights: dict[str, float] | None,
-        max_hops: int = 2,
-        lane_limit: int | None = None,
-    ) -> DataFrame:
-        """RetrievalMode::Graph (recall.rs:479-545): semantic seeds
-        (k*3 over-fetch), multi-hop expansion over relation edges with
-        exponential score decay (seeds 1.0, hop h at 0.5^h), RRF fusion
-        of the vector and graph lanes.
-
-        edges: (src_id, dst_id) frame — the engine's schema carries no
-        relations table, so the graph is an input (e.g. extract_edges
-        output once the extractor lands). Expansion is hop-bounded
-        equi-joins semi-joined against the PERMISSION-FILTERED corpus,
-        so a relation can never leak an invisible memory into the
-        results — the same per-record check the reference applies."""
-        if edges is None:
-            raise ValueError(
-                "recall(strategy='graph') needs an edges DataFrame "
-                "(src_id, dst_id); the schema has no relations table"
-            )
-        seeds = top_k_ranked(sem, [F.desc("score"), F.asc("id")], k * 3).select(
-            "id", "score"
-        )
-        und = edges.select(
-            F.col("src_id").alias("_s"), F.col("dst_id").alias("_d")
-        ).unionByName(
-            edges.select(F.col("dst_id").alias("_s"), F.col("src_id").alias("_d"))
-        )
-        visible = corpus.select("id")
-        seen = seeds.select("id")
-        frontier = seen
-        graph_lane = seeds.select("id", F.lit(1.0).alias("score"))
-        decay = 0.5
-        for _hop in range(max_hops):
-            nxt = (
-                frontier.join(und, frontier.id == und._s)
-                .select(F.col("_d").alias("id"))
-                .distinct()
-                .join(seen, "id", "left_anti")
-                .join(visible, "id", "left_semi")
-            )
-            graph_lane = graph_lane.unionByName(
-                nxt.select("id", F.lit(decay).alias("score"))
-            )
-            seen = seen.unionByName(nxt)
-            frontier = nxt
-            decay *= 0.5
-        fused = rrf_fuse(
-            {"vector": seeds, "graph": graph_lane},
-            weights or {"vector": 1.0, "graph": 1.0},
-            rrf_k,
-            id_col="id",
+        return self.recall_batch(
+            q,
+            principal,
+            strategy=strategy,
+            k=k,
+            now=now,
+            rrf_k=rrf_k,
+            weights=weights,
+            domain_scope=domain_scope,
+            edges=edges,
+            reasoning_trust=reasoning_trust,
             lane_limit=lane_limit,
-        )
-        return fused.withColumnRenamed("rrf_score", "score").drop("rank").join(
-            corpus, "id"
-        )
+            ann=ann,
+        ).drop("query_id")
 
     def _graph_recall_batch(
         self,
@@ -1062,19 +883,15 @@ class MnemoSparkEngine:
         over-fetch, WindowGroupLimit-bounded rank), fixed-depth
         expansion over relation edges with 0.5^hop decay and
         per-(query, node) first-visit dedup, per-query RRF fusion of
-        the vector and graph lanes — identical semantics to the
-        single-query walk (equivalence pytest) in ONE plan for the
-        whole batch. Expansion semi-joins the permission-filtered
-        corpus every hop (operators/graph.expand_grouped), so an
-        invisible memory neither surfaces nor bridges for ANY query."""
+        the vector and graph lanes, in ONE plan for the whole batch —
+        each query walks from its own seeds only, so its rows never
+        depend on the rest of the batch. Expansion semi-joins the
+        permission-filtered corpus every hop (operators/graph.
+        expand_grouped), so an invisible memory neither surfaces nor
+        bridges for ANY query."""
         from mnemo_spark.operators.graph import expand_grouped
         from mnemo_spark.operators.rrf import rrf_fuse_grouped
 
-        if edges is None:
-            raise ValueError(
-                "recall_batch(strategy='graph') needs an edges DataFrame "
-                "(src_id, dst_id); the schema has no relations table"
-            )
         w = Window.partitionBy("_qid").orderBy(F.desc("score"), F.asc("id"))
         seeds = (
             sem.withColumn("_r", F.row_number().over(w))
@@ -1143,42 +960,72 @@ class MnemoSparkEngine:
         per query) — the engine-batches-queries serving posture
         (SURVEY §6; the reference serves recall one request at a time,
         recall.rs:332, and its J6 many-queries analog is the
-        golem:vector batch search surface).
+        golem:vector batch search surface). This is the engine's only
+        retrieval path: `recall` is this verb over a one-row query
+        frame.
 
-        Semantics contract: recall_batch(queries=[q]) ≡ recall(q) row
-        for row, for every strategy and policy knob — the permission
-        filter, plan-tier exclusion, domain scope and reasoning-trust
-        policy all run through the SAME `_recall_corpus` pipeline
-        BEFORE scoring (permission-safe ANN,
-        integration_test.rs:2130), and lane ranking/fusion use the
-        same 6dp-round + id tiebreak. Enforced by
-        tests/test_recall_batch.py's equivalence property.
+        Permission filter, plan-tier exclusion, domain scope and
+        reasoning-trust policy all run in `_recall_corpus` BEFORE
+        scoring (the reference's filtered_search contract: permission-
+        safe ANN, integration_test.rs:2130, SURVEY §4). Lane ranking
+        and fusion order by the 6dp-rounded score with an id
+        tiebreak, and every lane ranks within its query, so a query's
+        rows never depend on the other queries in its batch.
 
         Batch economics: the corpus side of every lane is computed
         once — BM25 corpus statistics (batch_bm25), one corpus scan
         for the semantic dot, one recency projection shared by all
         queries — so per-query marginal cost is a broadcast join, not
-        a corpus pass. lane_limit is the reference's per-lane
-        candidate over-fetch (limit*3, recall.rs:397) and defaults to
-        AUTO = k*3 (r9, VERDICT r8 #6): each lane feeds only its
-        per-query top-N into fusion (WindowGroupLimit keeps the rank
-        filter a bounded heap, not a sort) — the 100-TB shape, and
-        what the reference always does. Pass lane_limit=None for
-        full-lane fusion (the opt-in exactness mode); `recall` shares
-        the same default, so the batch≡single equivalence holds at
-        every setting.
+        a corpus pass. The query frame itself is collected once into
+        a driver-side relation: the dense kernel ships every query
+        vector and the exact and lexical lanes broadcast the queries,
+        so no strategy keeps it distributed, and a driver-side frame
+        lets the embedding, the query terms and the fusion's group
+        ids read it without a Spark job.
 
-        strategy='graph' (r9): per-query semantic seeds expanded over
-        the `edges` frame — see _graph_recall_batch.
+        lane_limit: per-lane candidate over-fetch feeding RRF fusion.
+        Default AUTO = k * RECALL_LANE_OVERFETCH — the reference's
+        limit*3 (recall.rs:397): each lane feeds only its per-query
+        top-N into fusion (WindowGroupLimit keeps the rank filter a
+        bounded heap, not a sort), O(lanes·3k) instead of O(corpus)
+        per lane. Pass None for full-lane fusion — the exactness mode
+        where every corpus row contributes its reciprocal-rank term.
+
+        domain_scope (P3, retrieval.rs:154-174 DomainScope / the
+        v0.4.15 anti-dilution mode): {"namespace": str, "doc_class":
+        str, "tags": [..]} — restricts the candidate set BEFORE any
+        similarity step, so off-domain-but-semantically-similar
+        records cannot dilute the top-k. namespace/doc_class match the
+        metadata JSON; tags must ALL be present. Being a pre-scoring
+        column predicate, Catalyst pushes it into the scan.
+
+        reasoning_trust (v0.5.17 forged-reasoning defense,
+        retrieval.rs:216-430 ReasoningTrustPolicy): opt-in
+        {"action": "quarantine"|"down_weight",
+         "trusted": [authorship...], "down_weight_factor": f}.
+        An entry is admitted iff
+        metadata.reasoning_provenance.authorship is in `trusted`
+        (default: model_authored / user_provided / tool_verified);
+        absent or unparseable provenance reads as 'unverified' — the
+        reference's FAIL-CLOSED default. quarantine excludes
+        pre-scoring; down_weight multiplies the final score (default
+        x0.1) and re-ranks. None keeps the read path unchanged;
+        composes with every strategy.
+
+        strategy: 'exact' | 'lexical' (BM25 over the same tokens the
+        corpus uses, functions.text.tokens) | 'semantic' | 'hybrid'
+        (RRF of semantic, lexical and recency) | 'graph' (per-query
+        semantic seeds expanded over the `edges` frame — see
+        _graph_recall_batch). 'auto' is the reference's wire name for
+        hybrid; 'domain_scoped' (v0.4.15) is a single vector pass over
+        the domain-scoped corpus.
 
         ann='auto'|'exact'|'ivf' (r10, VERDICT r9 #3): execution mode
         of the dense lane. 'auto' (default) serves exact dot scores
         below params.ANN_ROUTE_MIN_CORPUS store rows and routes
         through IVF cell probing above it — sub-O(corpus) per query,
         the reference's serve-from-index posture (usearch.rs:18-28).
-        `recall` takes the same knob with the same default, so the
-        batch(1) ≡ recall equivalence holds in every regime. Routed
-        recall@10 vs exact is gated ≥0.95 by tools/eval_ann.py
+        Routed recall@10 vs exact is gated ≥0.95 by tools/eval_ann.py
         --routed at the 10x corpus.
         """
         corpus, rt_admitted = self._recall_corpus(
@@ -1190,22 +1037,25 @@ class MnemoSparkEngine:
             strategy = "hybrid"
         elif strategy == "domain_scoped":
             strategy = "semantic"
+        if strategy not in ("exact", "lexical", "semantic", "hybrid", "graph"):
+            raise ValueError(f"unknown strategy {strategy!r}")
+        if strategy == "graph" and edges is None:
+            raise ValueError(
+                "recall strategy='graph' needs an edges DataFrame "
+                "(src_id, dst_id); the schema has no relations table"
+            )
         q = queries.select(
             F.col(qid_col).alias("_qid"), F.col(query_col).alias("_q")
         )
+        qrows = [tuple(r) for r in q.collect()]
+        q = local_relation(self.spark, qrows, q.schema)
 
         def lexical_lane():
             from mnemo_spark.operators.bm25 import batch_bm25
 
-            qterms = q.select(
-                "_qid",
-                F.filter(
-                    F.split(F.lower(F.col("_q")), r"\s+"), lambda t: t != ""
-                ).alias("_terms"),
-            )
             return batch_bm25(
                 corpus,
-                qterms,
+                q.select("_qid", tokens("_q").alias("_terms")),
                 id_col="id",
                 text_col="content",
                 qid_col="_qid",
@@ -1213,10 +1063,13 @@ class MnemoSparkEngine:
             ).withColumnRenamed("bm25", "score")
 
         def semantic_lane(limit: int | None = None):
-            # U1 fail-loud gate, identical to recall's
+            # U1 fail-loud gate (embedding/mod.rs:7-53, enforced at
+            # recall.rs:366-375): semantic retrieval under a provider
+            # that can't embed must refuse, not silently degrade —
+            # graph mode seeds from the semantic lane, so it gates too
             if not getattr(self.embedder, "semantic", False):
                 raise RuntimeError(
-                    f"recall_batch(strategy={strategy!r}) requires a semantic-"
+                    f"recall(strategy={strategy!r}) requires a semantic-"
                     f"capable embedder; configured provider "
                     f"{getattr(self.embedder, 'name', type(self.embedder).__name__)!r} "
                     "cannot embed (reference fail-loud contract)"
@@ -1225,28 +1078,20 @@ class MnemoSparkEngine:
                 qvecs = q.select("_qid", self._embed(F.col("_q")).alias("_qv"))
             else:
                 # ONE provider batch call for the whole query frame —
-                # the point of the batch verb (vs recall's call-per-
-                # query); the query side is definitionally small
-                from pyspark.sql.types import (
-                    ArrayType,
-                    FloatType,
-                    StructField,
-                    StructType,
-                )
-
+                # query vectors come from the same provider as the
+                # stored vectors (ADVICE r2)
                 self.embedder.load()
-                qrows = q.collect()
-                vecs = self.embedder.embed([r["_q"] for r in qrows])
+                vecs = self.embedder.embed([r[1] for r in qrows])
                 schema = StructType(
                     [
                         StructField("_qid", q.schema["_qid"].dataType),
                         StructField("_qv", ArrayType(FloatType())),
                     ]
                 )
-                qvecs = local_frame(
+                qvecs = local_relation(
                     self.spark,
                     [
-                        (r["_qid"], [float(v) for v in vec])
+                        (r[0], [float(v) for v in vec])
                         for r, vec in zip(qrows, vecs)
                     ],
                     schema,
@@ -1267,17 +1112,18 @@ class MnemoSparkEngine:
             hits = lexical_lane().join(corpus, "id")
         elif strategy == "semantic":
             # margin-safe pruning to the final top-k unless a
-            # down-weight pass can promote arbitrary ranks (the same
-            # per-strategy policy recall applies)
+            # down-weight pass can promote arbitrary ranks (see
+            # batch_dot_scores)
             hits = semantic_lane(
                 limit=None if rt_admitted is not None else k
             ).join(corpus, "id")
         elif strategy == "graph":
+            # graph consumes only the k*3 seed over-fetch
             hits = self._graph_recall_batch(
                 corpus, semantic_lane(limit=k * 3), edges, k, rrf_k, weights,
                 lane_limit=lane_limit,
             )
-        elif strategy == "hybrid":
+        else:
             from mnemo_spark.operators.rrf import rrf_fuse_grouped
 
             now_c = (
@@ -1318,10 +1164,10 @@ class MnemoSparkEngine:
             hits = fused.withColumnRenamed("rrf_score", "score").join(
                 corpus, "id"
             )
-        else:
-            raise ValueError(f"unknown strategy {strategy!r}")
 
         if rt_admitted is not None:
+            # DownWeight action (ReasoningTrustPolicy::rerank):
+            # untrusted hits keep their row, score x factor, re-ranked
             factor = float(reasoning_trust.get("down_weight_factor", 0.1))
             hits = hits.withColumn(
                 "score",
@@ -1490,45 +1336,6 @@ class MnemoSparkEngine:
             "confidence": round(sum(r["score"] for r in rows) / len(rows), 6),
         }
         return hits, belief
-
-    def _semantic_lane(
-        self,
-        corpus: DataFrame,
-        query: str,
-        limit: int | None = None,
-        ann: str = "auto",
-    ) -> DataFrame:
-        """(id, score=dot) for one query — a 1-query view of the same
-        Arrow matmul kernel the batch verb uses (operators/vector.
-        batch_dot_scores; r9 — the interpreted zip_with/aggregate dot
-        was measured 10-100× slower per row, the known HOF-vs-kernel
-        gap). `limit` margin-prunes per Arrow batch when the caller
-        only consumes a per-query top-N (see batch_dot_scores); the
-        callers pass it ONLY where truncation provably cannot change
-        their output."""
-        if self._embedder_is_default():
-            # local_frame, not createDataFrame(list): the one-row query
-            # frame's pickled-slice scan schedules 32 near-empty Python
-            # tasks every time a plan built on it executes (r13,
-            # guide §4)
-            qdf = local_frame(self.spark, [(query,)], "content string")
-            qvec = qdf.select(self._embed(F.col("content")).alias("qv"))
-        else:
-            # one query string: embed driver-side through the configured
-            # provider (ADVICE r2 — query vectors must come from the
-            # same provider as stored vectors) and fold to a literal
-            self.embedder.load()
-            vec = [float(v) for v in self.embedder.embed([query])[0]]
-            qvec = self.spark.range(1).select(
-                F.array(*[F.lit(v) for v in vec]).cast("array<float>").alias("qv")
-            )
-        lane = self._dot_lane(
-            corpus,
-            qvec.select(F.lit(0).alias("_qid"), F.col("qv").alias("_qv")),
-            limit=limit,
-            ann=ann,
-        )
-        return lane.select("id", "score")
 
     def _ann_route(self, Q, ann: str, ann_nprobe: int | None = None):
         """Resolve the dense-lane execution mode (VERDICT r9 #3) and,
@@ -1734,11 +1541,11 @@ class MnemoSparkEngine:
 
         Kernel path: collect the query vectors (definitionally small —
         the same data movement their broadcast performed) and run one
-        numpy matmul per corpus Arrow batch. NOTE: the collect means
-        BUILDING a recall/recall_batch plan triggers one small Spark
-        job (the query-embedding scan) before the returned frame is
-        acted on — callers that require a fully-lazy plan should use
-        the expression fallback. The collected matrix ships to
+        numpy matmul per corpus Arrow batch. NOTE: the collect runs
+        at plan-build time; recall_batch passes a driver-side query
+        frame, so for it the collect is evaluated on the driver
+        without a Spark job, while a distributed qvecs frame costs
+        one small job. The collected matrix ships to
         executors via sparkContext.broadcast (once per executor), not
         the task closure (ADVICE r9). NULL query vectors (a zero-token
         query) fall back to the expression form so the

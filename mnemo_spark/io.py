@@ -320,6 +320,16 @@ def local_frame(spark: SparkSession, rows: list, schema) -> DataFrame:
 
     `schema` may be a StructType or a DDL string (r13 — the literal
     query/window fixture frames in the registry pass DDL)."""
+    df = local_relation(spark, rows, schema)
+    return df.coalesce(1) if rows else df
+
+
+def local_relation(spark: SparkSession, rows: list, schema) -> DataFrame:
+    """Driver rows as a LocalRelation, via the Arrow path (Spark 4
+    builds one from a pandas frame). Collects, distincts and
+    projections over it are evaluated on the driver, without a Spark
+    job; `local_frame` adds the one-partition coalesce, which makes
+    every collect of it a job again. `schema` as in local_frame."""
     import pandas as pd
 
     if isinstance(schema, str):
@@ -328,11 +338,10 @@ def local_frame(spark: SparkSession, rows: list, schema) -> DataFrame:
         from pyspark.sql.types import StructType
 
         schema = StructType.fromDDL(schema)
-    cols = [f.name for f in schema.fields]
     if not rows:
         return spark.createDataFrame([], schema)
-    pdf = pd.DataFrame(rows, columns=cols)
-    return spark.createDataFrame(pdf, schema=schema).coalesce(1)
+    pdf = pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+    return spark.createDataFrame(pdf, schema=schema)
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -15,9 +15,10 @@ SF_DIR = os.environ.get("MNEMO_TEST_SF_DIR", "/root/testdata/sf0.001")
 @pytest.fixture(scope="session")
 def spark():
     # MNEMO_TEST_CPUS: tools/partest.py runs N pytest processes with
-    # local[4] each — 8x4 saturates the box better than one local[8]
-    # session walking the suite serially
-    s = get_spark("mnemo_tests", cpus=int(os.environ.get("MNEMO_TEST_CPUS", "8")))
+    # local[4] each. Unset, get_spark sizes the session from the host
+    # (SPARK_GRAFT_CPUS, else the CPU count)
+    cpus = os.environ.get("MNEMO_TEST_CPUS")
+    s = get_spark("mnemo_tests", cpus=int(cpus) if cpus else None)
     yield s
 
 

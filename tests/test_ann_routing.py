@@ -1,5 +1,6 @@
-"""Dense-lane ANN routing (VERDICT r9 #3): recall/recall_batch route
-their semantic lane through IVF cell probing above a store-size
+"""Dense-lane ANN routing (VERDICT r9 #3): recall_batch — and so
+`recall`, which is recall_batch over a one-row query frame — routes
+its semantic lane through IVF cell probing above a store-size
 threshold (params.ANN_ROUTE_MIN_CORPUS), mirroring the reference's
 serve-from-HNSW-not-exact choice (index/usearch.rs:18-28).
 
@@ -7,7 +8,8 @@ Contracts proven here:
 - routed scores are EXACT dot scores on the probed candidate subset
   (the approximation is candidate pruning, never score distortion);
 - ann='auto' below the threshold is bit-identical to ann='exact';
-- batch(1) ≡ recall holds under forced routing;
+- under forced routing a query's rows do not depend on the other
+  queries in its batch (each probes only its own cells);
 - a forced 'ivf' on a vectorless store refuses loudly;
 - the cell index artifact covers every embedded row with a valid cell.
 
@@ -107,20 +109,21 @@ def test_auto_below_threshold_is_exact(spark):
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, e.collect()))
 
 
-def test_batch1_equals_recall_under_routing(spark):
+def test_routed_query_independent_of_batch(spark):
     eng = _engine(spark)
-    single = {
+    alone = {
         r["id"]
         for r in eng.recall("spark window term3", "a1", strategy="semantic",
                             k=10, ann="ivf").collect()
     }
-    q1 = _queries(spark).filter(F.col("query_id") == "q1")
     batched = {
         r["id"]
-        for r in eng.recall_batch(q1, "a1", strategy="semantic", k=10,
-                                  ann="ivf").collect()
+        for r in eng.recall_batch(_queries(spark), "a1", strategy="semantic",
+                                  k=10, ann="ivf")
+        .filter(F.col("query_id") == "q1")
+        .collect()
     }
-    assert single == batched
+    assert alone and alone == batched
 
 
 def test_forced_ivf_without_vectors_refuses(spark):

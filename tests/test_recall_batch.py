@@ -1,8 +1,10 @@
-"""recall_batch — the batch-of-queries recall verb (SURVEY §6 "the
-engine batches queries"; the reference serves one recall per request,
-recall.rs:332, so the contract here is EQUIVALENCE: a batched query
-returns row-for-row what its single-query twin returns, including the
-permission-safe-ANN property of integration_test.rs:2130)."""
+"""recall_batch — the batch-of-queries recall verb and the engine's
+only retrieval path (SURVEY §6 "the engine batches queries"; the
+reference serves one recall per request, recall.rs:332). `recall` is
+recall_batch over a one-row query frame, so these tests pin expected
+rows per strategy and policy knob, that a query's rows do not depend
+on the other queries in its batch, and the permission-safe-ANN
+property of integration_test.rs:2130."""
 
 from __future__ import annotations
 
@@ -63,22 +65,121 @@ def _rows(df, drop=("query_id",)):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
 
-STRATEGIES = ["exact", "lexical", "semantic", "hybrid"]
-
-
-@pytest.mark.parametrize("strategy", STRATEGIES)
-def test_single_query_batch_equals_recall(engine, strategy):
-    """recall_batch(1 query) ≡ recall(query) — same rows, scores,
-    ranks — for every strategy."""
-    q = "paris has a big tower" if strategy == "exact" else "paris tower"
-    single = _rows(engine.recall(q, "alice", strategy=strategy, now=NOW),
-                   drop=())
-    batch = _rows(
-        engine.recall_batch(
-            _qdf(engine.spark, [q]), "alice", strategy=strategy, now=NOW
-        )
+def _edges(spark):
+    # memory-graph relations: m1-m2 linked (both paris), m3-m6 linked
+    # (both code), m4 reachable only from m3, m5 dangling private
+    return spark.createDataFrame(
+        [("m1", "m2"), ("m3", "m6"), ("m6", "m4"), ("m5", "m2")],
+        "src_id string, dst_id string",
     )
-    assert batch == single
+
+
+def _ranked(df):
+    return [
+        (r["id"], r["rank"], r["score"])
+        for r in sorted(df.collect(), key=lambda r: r["rank"])
+    ]
+
+
+# alice's recall at NOW → expected (id, rank, score). alice sees her
+# own m1/m2/m3/m6 and bob's public m4. Scores: BM25 (lexical),
+# hash-bag cosine (semantic), weighted RRF with rrf_k=30 (hybrid:
+# semantic 6, lexical 3, recency 1; graph: vector 1, graph 1). E.g.
+# hybrid m2 = 6/31 + 3/31 + 1/32 (ranks 1, 1 and 2 in the lanes);
+# under domain_scope {geo} + down_weight 0.2, m1 = 6/32 + 3/32 + 1/32
+# and the forged-provenance m2 = 0.2 x 10/31.
+_HYBRID = [
+    ("m2", 1, 0.321573),
+    ("m1", 2, 0.309821),
+    ("m3", 3, 0.214076),
+    ("m4", 4, 0.205882),
+    ("m6", 5, 0.201732),
+]
+_SEMANTIC = [
+    ("m2", 1, 0.632456),
+    ("m1", 2, 0.25),
+    ("m3", 3, 0.0),
+    ("m4", 4, 0.0),
+    ("m6", 5, 0.0),
+]
+EXPECTED = {
+    "exact": ("paris has a big tower", {"strategy": "exact"}, [("m2", 1, 1.0)]),
+    "lexical": (
+        "paris tower",
+        {"strategy": "lexical"},
+        [("m2", 1, 2.223856), ("m1", 2, 0.79424)],
+    ),
+    "semantic": ("paris tower", {"strategy": "semantic"}, _SEMANTIC),
+    "domain_scoped_alias": (
+        "paris tower", {"strategy": "domain_scoped"}, _SEMANTIC,
+    ),
+    "hybrid": ("paris tower", {"strategy": "hybrid"}, _HYBRID),
+    "auto_alias": ("paris tower", {"strategy": "auto"}, _HYBRID),
+    "hybrid_full_lane": (
+        "paris tower", {"strategy": "hybrid", "lane_limit": None}, _HYBRID,
+    ),
+    "hybrid_scope_down_weight": (
+        "paris tower",
+        {
+            "strategy": "hybrid",
+            "domain_scope": {"tags": ["geo"]},
+            "reasoning_trust": {
+                "action": "down_weight", "down_weight_factor": 0.2,
+            },
+        },
+        [("m1", 1, 0.3125), ("m2", 2, 0.064516)],
+    ),
+    "hybrid_quarantine": (
+        "paris tower",
+        {"strategy": "hybrid", "reasoning_trust": {"action": "quarantine"}},
+        [("m1", 1, 0.320626), ("m3", 2, 0.219758), ("m4", 3, 0.213068)],
+    ),
+    "graph_paris": (
+        "paris tower",
+        {"strategy": "graph", "edges": True},
+        [
+            ("m1", 1, 0.063508),
+            ("m2", 2, 0.063508),
+            ("m3", 3, 0.060606),
+            ("m4", 4, 0.058824),
+            ("m6", 5, 0.057143),
+        ],
+    ),
+    "graph_spark": (
+        "spark join window",
+        {"strategy": "graph", "edges": True},
+        [
+            ("m1", 1, 0.06167),
+            ("m4", 2, 0.06167),
+            ("m3", 3, 0.060606),
+            ("m2", 4, 0.059821),
+            ("m6", 5, 0.059821),
+        ],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(EXPECTED))
+def test_recall_expected_rows(engine, case):
+    """Expected ids, ranks and scores per strategy and policy knob."""
+    query, kw, want = EXPECTED[case]
+    kw = dict(kw)
+    if kw.get("edges"):
+        kw["edges"] = _edges(engine.spark)
+    assert _ranked(engine.recall(query, "alice", now=NOW, **kw)) == want
+
+
+@pytest.mark.parametrize("strategy", ["lexical", "hybrid"])
+def test_punctuated_query_matches_like_plain(engine, strategy):
+    """The query is tokenised like the corpus (functions.text.tokens):
+    case and punctuation do not change which memories match."""
+    plain = _ranked(
+        engine.recall("paris tower", "alice", strategy=strategy, now=NOW)
+    )
+    punct = _ranked(
+        engine.recall("Paris, tower?", "alice", strategy=strategy, now=NOW)
+    )
+    assert plain and punct == plain
 
 
 def test_multi_query_batch_equals_per_query_recall(engine):
@@ -93,25 +194,6 @@ def test_multi_query_batch_equals_per_query_recall(engine):
         want = _rows(engine.recall(q, "alice", strategy="hybrid", now=NOW),
                      drop=())
         assert got == want, q
-
-
-def test_batch_policy_knobs_match_recall(engine):
-    """domain_scope + reasoning_trust(down_weight) compose identically
-    in the batch verb (the P3/P4 policy surface is shared code)."""
-    kw = dict(
-        strategy="hybrid",
-        now=NOW,
-        domain_scope={"tags": ["geo"]},
-        reasoning_trust={"action": "down_weight", "down_weight_factor": 0.2},
-    )
-    single = _rows(engine.recall("paris tower", "alice", **kw), drop=())
-    batch = _rows(
-        engine.recall_batch(_qdf(engine.spark, ["paris tower"]), "alice", **kw)
-    )
-    assert batch == single
-    # the forged-provenance m2 was down-weighted below the trusted m1
-    ids = [r[0] for r in sorted(batch, key=lambda r: r[-1])]
-    assert ids.index("m1") < ids.index("m2")
 
 
 def test_batch_is_permission_safe(engine):
@@ -147,15 +229,6 @@ def test_batch_lane_limit_overfetch(engine):
         assert len(ranks) <= 2
 
 
-def _edges(spark):
-    # memory-graph relations: m1-m2 linked (both paris), m3-m6 linked
-    # (both code), m4 reachable only from m3, m5 dangling private
-    return spark.createDataFrame(
-        [("m1", "m2"), ("m3", "m6"), ("m6", "m4"), ("m5", "m2")],
-        "src_id string, dst_id string",
-    )
-
-
 def test_batch_graph_requires_edges(engine):
     with pytest.raises(ValueError, match="edges"):
         engine.recall_batch(
@@ -163,22 +236,32 @@ def test_batch_graph_requires_edges(engine):
         ).collect()
 
 
-def test_single_query_batch_graph_equals_recall(engine):
-    """VERDICT r8 #2: batch(1 graph query) ≡ recall(strategy='graph')
-    — the last strategy asymmetry between the verbs, closed."""
+def test_graph_recall_lazy_seed_lane_matches_localized(engine, monkeypatch):
+    """localize_small(fallback=True) hands a too-large seed set back
+    as the lazy frame: force that lane and the graph recall must not
+    change."""
     e = _edges(engine.spark)
-    for q in ("paris tower", "spark join window"):
-        single = _rows(
-            engine.recall(q, "alice", strategy="graph", edges=e, now=NOW),
+    queries = ["paris tower", "spark join window"]
+
+    def run():
+        return _rows(
+            engine.recall_batch(
+                _qdf(engine.spark, queries), "alice", strategy="graph",
+                edges=e, now=NOW,
+            ),
             drop=(),
         )
-        batch = _rows(
-            engine.recall_batch(
-                _qdf(engine.spark, [q]), "alice", strategy="graph",
-                edges=e, now=NOW,
-            )
-        )
-        assert batch == single, q
+
+    localized = run()
+    lazy_calls = []
+
+    def keep_lazy(df, **kw):
+        lazy_calls.append(kw.get("why"))
+        return df
+
+    monkeypatch.setattr("mnemo_spark.engine.localize_small", keep_lazy)
+    assert run() == localized
+    assert lazy_calls, "graph recall no longer localizes its seed set"
 
 
 def test_multi_query_batch_graph_equals_per_query(engine):
@@ -205,20 +288,3 @@ def test_multi_query_batch_graph_equals_per_query(engine):
         edges=e, now=NOW,
     ).collect()
     assert bout and all(r["agent_id"] == "bob" for r in bout)
-
-
-def test_batch_full_lane_optin_matches_recall(engine):
-    """lane_limit=None (full-lane fusion, the pre-r9 default) stays
-    available and the batch≡single equivalence holds there too."""
-    single = _rows(
-        engine.recall("paris tower", "alice", strategy="hybrid",
-                      lane_limit=None, now=NOW),
-        drop=(),
-    )
-    batch = _rows(
-        engine.recall_batch(
-            _qdf(engine.spark, ["paris tower"]), "alice",
-            strategy="hybrid", lane_limit=None, now=NOW,
-        )
-    )
-    assert batch == single

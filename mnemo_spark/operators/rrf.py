@@ -4,11 +4,12 @@ The reference fuses ranked lanes (vector / bm25 / recency / graph) as
   score(id) = Σ_lanes  w_lane / (rrf_k + rank_lane(id))
 with 1-based ranks (the Rust code enumerates 0-based and adds 1).
 
-Spark-first: each lane is a (id, lane_score) DataFrame; rank each lane
-with a row_number window, union the lanes (cheap — ranked lanes are
-already candidate-sized, not corpus-sized), and a single groupBy(id)
-sums the reciprocal-rank contributions. One shuffle on id over
-candidate rows only.
+One fusion body, `rrf_fuse_grouped`, serves a batch of queries: every
+lane carries a group key (the query id) and ranks within it. A single
+query is a batch of one — `rrf_fuse` adds a literal group column to
+its lanes and calls it. All lanes rank in ONE window pass over a
+lane-tagged union and a single groupBy(group, id) sums the
+reciprocal-rank contributions, over candidate rows only.
 
 Determinism contract: every lane ranks by (round(score,6) desc,
 id asc) so rank assignment — and therefore fused scores — are
@@ -17,6 +18,7 @@ bit-identical with the DuckDB oracle.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -31,37 +33,24 @@ DEFAULT_RRF_K = 60
 # broadcast-join replication path is used instead
 MAX_LITERAL_GROUPS = 1000
 
+# the literal group column rrf_fuse gives its lanes (a batch of one)
+_ONE_GROUP = "_rrf_group"
+
 
 def _local_group_values(groups: DataFrame, group_col: str) -> list | None:
     """The distinct group ids IF the groups frame is a driver-side
     literal (LocalRelation) — collecting one is driver-only work, no
     Spark job. Returns None for any distributed plan (never collect
-    those here) or past MAX_LITERAL_GROUPS."""
+    those here), when the plan probe fails in the JVM (the caller
+    then replicates through the join), or past MAX_LITERAL_GROUPS."""
     try:
         plan = groups._jdf.queryExecution().optimizedPlan()
-        if plan.getClass().getSimpleName() != "LocalRelation":
-            return None
-        vals = sorted({r[0] for r in groups.select(group_col).collect()})
-    except Exception:  # noqa: BLE001 - fall back to the join path
+    except Py4JError:
         return None
+    if plan.getClass().getSimpleName() != "LocalRelation":
+        return None
+    vals = sorted({r[0] for r in groups.select(group_col).collect()})
     return vals if len(vals) <= MAX_LITERAL_GROUPS else None
-
-
-def rank_lane(
-    lane: DataFrame, id_col: str, score_col: str, k: int | None = None
-) -> DataFrame:
-    """Assign deterministic 1-based ranks within one lane. With k set
-    (the lane over-fetch), ranks come from a parallel partial top-k
-    (TakeOrderedAndProject) instead of a single-partition window."""
-    order = [F.desc(F.round(F.col(score_col), ROUND_DP)), F.asc(id_col)]
-    if k is not None:
-        ranked = top_k_ranked(lane, order, k, rank_col="_rank")
-    else:
-        # full-lane ranking (explain surface): deliberate single
-        # partition over candidate-sized input
-        w = Window.partitionBy(_GPART).orderBy(*order)
-        ranked = _const_partition(lane).withColumn("_rank", F.row_number().over(w))
-    return ranked.select(F.col(id_col).alias("_id"), "_rank")
 
 
 def _lane_weight_map(names, weights: dict[str, float]):
@@ -81,172 +70,42 @@ def rrf_fuse(
     score_col: str = "score",
     limit: int | None = None,
     lane_limit: int | None = None,
-    unified: bool = True,
 ) -> DataFrame:
-    """Fuse ranked lanes → (id, rrf_score, rank).
+    """Fuse ranked lanes of ONE query → (id, rrf_score, rank).
 
     lanes: name → DataFrame with (id_col, score_col). Missing weights
     default to 1.0 (the reference's equal-weight `auto` mode).
     lane_limit = the reference's candidate over-fetch (`limit*3` per
     lane, recall.rs:397): only each lane's top-N feed fusion — at
-    corpus scale the fusion input is O(lanes·N), not O(corpus).
+    corpus scale the fusion input is O(lanes·N), not O(corpus). With
+    lane_limit=None every lane ranks in full.
 
-    unified=True (r13, VERDICT r12 #1): ALL lanes rank in ONE window
-    pass — tag each lane, union the raw scores, one row_number window
-    partitioned by the lane tag — instead of one rank subtree per
-    lane. The r12 REST-metrics diagnosis showed the retrieval
-    cluster's warm wall is chained stage barriers with single-digit-ms
-    real CPU per task; per-lane rank subtrees are exactly such a
-    chain. With lane_limit set the rank filter plans a
-    WindowGroupLimit whose PARTIAL mode bounds every input partition
-    to lanes × lane_limit rows BEFORE the exchange — the same
-    never-corpus-on-one-task bound the per-lane TakeOrderedAndProject
-    gave; with lane_limit=None each lane deliberately occupies one
-    partition, matching the legacy single-partition full ranking.
-    unified=False keeps the per-lane shape as the executable spec
-    (tests/test_r13_fixes.py asserts row equality between the two).
+    A batch of one: each lane gets a literal group column and
+    rrf_fuse_grouped fuses them. The final ranking stays here and
+    `limit` is not passed through: a top-k (TakeOrderedAndProject)
+    computes partial top-ks per partition, where the per-group final
+    window would sort the whole fused set of the one group in one
+    task.
     """
-    weights = weights or {}
-    if unified:
-        tagged = None
-        for name, lane in lanes.items():
-            t = lane.select(
-                F.col(id_col).alias("_id"),
-                F.round(F.col(score_col).cast("double"), ROUND_DP).alias("_s"),
-                F.lit(name).alias("_lane"),
-            )
-            tagged = t if tagged is None else tagged.unionByName(t)
-        ranked = tagged.withColumn(
-            "_rank",
-            F.row_number().over(
-                Window.partitionBy("_lane").orderBy(F.desc("_s"), F.asc("_id"))
-            ),
-        )
-        if lane_limit is not None:
-            ranked = ranked.filter(F.col("_rank") <= lane_limit)
-        wmap = _lane_weight_map(lanes, weights)
-        fused = (
-            ranked.select(
-                "_id",
-                (
-                    wmap[F.col("_lane")] / (F.lit(float(rrf_k)) + F.col("_rank"))
-                ).alias("_contrib"),
-            )
-            .groupBy("_id")
-            .agg(F.round(F.sum("_contrib"), ROUND_DP).alias("rrf_score"))
-        )
-    else:
-        contribs = []
-        for name, lane in lanes.items():
-            w_val = float(weights.get(name, 1.0))
-            ranked = rank_lane(lane, id_col, score_col, k=lane_limit)
-            contribs.append(
-                ranked.select(
-                    "_id",
-                    (F.lit(w_val) / (F.lit(float(rrf_k)) + F.col("_rank"))).alias("_contrib"),
-                )
-            )
-        unioned = contribs[0]
-        for c in contribs[1:]:
-            unioned = unioned.unionByName(c)
-        fused = unioned.groupBy("_id").agg(
-            F.round(F.sum("_contrib"), ROUND_DP).alias("rrf_score")
-        )
-    order = [F.desc("rrf_score"), F.asc("_id")]
+    fused = rrf_fuse_grouped(
+        {
+            name: lane.withColumn(_ONE_GROUP, F.lit(0))
+            for name, lane in lanes.items()
+        },
+        weights,
+        rrf_k,
+        group_col=_ONE_GROUP,
+        id_col=id_col,
+        score_col=score_col,
+        lane_limit=lane_limit,
+    )
+    order = [F.desc("rrf_score"), F.asc(id_col)]
     if limit is not None:
         out = top_k_ranked(fused, order, limit)
     else:
         w_final = Window.partitionBy(_GPART).orderBy(*order)
         out = _const_partition(fused).withColumn("rank", F.row_number().over(w_final))
-    return out.select(F.col("_id").alias(id_col), "rrf_score", "rank")
-
-
-def rrf_fuse_wide(
-    scored: DataFrame,
-    lanes: dict[str, tuple[str, float]],
-    rrf_k: int,
-    lane_limit: int,
-    id_col: str = "doc_id",
-    carry_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """All-lane RRF fusion in ONE distributed pass over a WIDE per-id
-    score frame (one row per id, one column per lane score) — the
-    serving shape `recall_core.recall_scored` produces.
-
-    `lanes`: name -> (score_col, weight). Null lane scores mean "id not
-    in this lane" and contribute nothing. `carry_cols` ride along to
-    the output (e.g. provenance for trust policy) so the caller never
-    joins back against the corpus.
-
-    Versus per-lane `rank_lane` + union (rrf_fuse): that shape runs one
-    TakeOrderedAndProject job per lane; this one unpivots the wide
-    frame and computes every lane's top-`lane_limit` in a single plan —
-    a two-phase top-k (per-partition sorted slice, then per-lane merge)
-    where each partition emits at most lanes x lane_limit candidate
-    structs. The per-partition collect_list is bounded by partition row
-    count (the rows are in executor memory anyway), the merge input by
-    partitions x lanes x lane_limit — never corpus-sized on one task.
-
-    Rank semantics are identical to rank_lane: 1-based by
-    (round(score, 6) DESC, id ASC); the two-phase top-k selects exactly
-    the rows `row_number() <= lane_limit` would.
-    """
-    entries = [
-        F.struct(F.lit(name).alias("_lane"), F.round(F.col(col), ROUND_DP).alias("_s"))
-        for name, (col, _w) in lanes.items()
-    ]
-    unp = (
-        scored.select(
-            F.col(id_col).alias("_cid"),
-            *[F.col(c) for c in carry_cols],
-            F.explode(F.array(*entries)).alias("_e"),
-        )
-        .select(
-            "_cid",
-            *carry_cols,
-            F.col("_e._lane").alias("_lane"),
-            F.col("_e._s").alias("_s"),
-        )
-        .where(F.col("_s").isNotNull())
-    )
-    # candidate struct sorts ascending by (-score, id): the unique id
-    # tiebreak means carry fields never participate in the comparison
-    cand = F.struct(
-        (-F.col("_s")).alias("_ns"),
-        F.col("_cid").alias("_id"),
-        *[F.col(c).alias(c) for c in carry_cols],
-    )
-    local = unp.groupBy("_lane", F.spark_partition_id().alias("_p")).agg(
-        F.slice(F.array_sort(F.collect_list(cand)), 1, lane_limit).alias("_c")
-    )
-    merged = (
-        local.select("_lane", F.explode("_c").alias("_e"))
-        .groupBy("_lane")
-        .agg(F.slice(F.array_sort(F.collect_list("_e")), 1, lane_limit).alias("_c"))
-    )
-    wmap = F.create_map(
-        *[
-            lit
-            for name, (_c, w) in lanes.items()
-            for lit in (F.lit(name), F.lit(float(w)))
-        ]
-    )
-    ranked = merged.select("_lane", F.posexplode("_c").alias("_r0", "_e"))
-    fused = (
-        ranked.select(
-            F.col("_e._id").alias("_id"),
-            *[F.col(f"_e.{c}").alias(c) for c in carry_cols],
-            (wmap[F.col("_lane")] / (F.lit(float(rrf_k)) + F.col("_r0") + 1)).alias(
-                "_contrib"
-            ),
-        )
-        .groupBy("_id")
-        .agg(
-            F.round(F.sum("_contrib"), ROUND_DP).alias("rrf_score"),
-            *[F.first(c).alias(c) for c in carry_cols],
-        )
-    )
-    return fused.select(F.col("_id").alias(id_col), "rrf_score", *carry_cols)
+    return out.select(id_col, "rrf_score", "rank")
 
 
 def rrf_fuse_grouped(
@@ -259,7 +118,6 @@ def rrf_fuse_grouped(
     lane_limit: int | None = None,
     limit: int | None = None,
     groups: "DataFrame | list | tuple | None" = None,
-    unified: bool = True,
     tagged: DataFrame | None = None,
     lane_col: str = "_lane",
     carry_cols: tuple[str, ...] = (),
@@ -270,34 +128,25 @@ def rrf_fuse_grouped(
     lanes: name → (group_col, id_col, score_col) DataFrame, one row
     per (query, candidate). → (group_col, id_col, rrf_score[, rank]).
 
+    Ranks per group are 1-based by (round(score, 6) DESC, id ASC).
+    lane_limit is the reference's per-lane candidate over-fetch
+    (recall.rs:397) applied PER QUERY; limit truncates the fused
+    output per query.
+
     A lane WITHOUT the group column is a query-independent prior
     (recency, document length): it is ranked ONCE and only its ranked
-    rows (top lane_limit when set) replicate to every group via a
-    broadcast cross join against `groups` — never corpus × queries.
+    rows (top lane_limit when set) replicate to every group — never
+    corpus × queries. `groups` names the group ids: a list/tuple of
+    literal ids (the fixed-batch case) replicates by an exploded
+    literal array — no distinct, no broadcast build, no join; a
+    DataFrame replicates by a broadcast join (or by the literal array
+    when it is a small driver-side LocalRelation).
 
-    Rank semantics per group match rank_lane exactly: 1-based by
-    (round(score, 6) DESC, id ASC). lane_limit is the reference's
-    per-lane candidate over-fetch (recall.rs:397) applied PER QUERY;
-    limit truncates the fused output per query.
-
-    unified=True (r13, VERDICT r12 #1 — the round's headline plan-
-    shape fix): ALL grouped lanes rank in ONE window pass over a
-    lane-tagged union, partitioned by (group, lane), instead of one
-    window subtree per lane. The r12 Spark-UI REST diagnosis showed
-    recall_batch's warm wall is chained stage barriers (4-6 ms real
-    CPU per hot-stage task); per-lane windows each paid their own
-    exchange + sort + query-stage barrier over the SAME melted
-    corpus projection. Query-independent lanes keep their separate
-    rank-once-replicate path (folding them into the grouped window
-    would put corpus × queries rows through the exchange).
-    unified=False keeps the per-lane shape as the executable spec
-    (tests/test_r13_fixes.py asserts row equality).
-
-    tagged (r13): an ALREADY-MELTED long frame (group_col, id_col,
-    lane_col, score_col) holding rows for several lanes at once — the
-    shape recall_batch_docs produces in one explode over its cached
-    wide per-doc frame. Treated exactly like grouped `lanes` entries;
-    weights are looked up by the lane tag (missing tags weigh 1.0).
+    tagged: an ALREADY-MELTED long frame (group_col, id_col, lane_col,
+    score_col) holding rows for several lanes at once — the shape one
+    explode over a wide per-doc score frame produces. Treated exactly
+    like grouped `lanes` entries; weights are looked up by the lane
+    tag (missing tags weigh 1.0).
 
     carry_cols: columns riding through fusion to the output (e.g.
     `source` for trust down-weighting) so the caller never joins the
@@ -305,127 +154,12 @@ def rrf_fuse_grouped(
     must provide each carry column, with consistent values per id —
     first() keeps an arbitrary lane's copy.
 
-    Scale: the per-group windows partition on the query id — ranks
-    parallelize across queries, and the `row_number() <= lane_limit`
-    filter plans a WindowGroupLimit (Spark ≥3.5) whose PARTIAL mode
-    bounds every input partition BEFORE the exchange. The fused
-    aggregation is one groupBy(query, id) over O(queries × lanes ×
-    lane_limit) rows — never corpus-sized per task.
-    """
-    weights = weights or {}
-    if unified:
-        return _rrf_fuse_grouped_unified(
-            lanes, weights, rrf_k, group_col, id_col, score_col,
-            lane_limit, limit, groups, tagged, lane_col, carry_cols,
-        )
-    if tagged is not None or carry_cols:
-        raise ValueError("tagged/carry_cols require unified=True")
-    if isinstance(groups, (list, tuple)):
-        raise ValueError("literal `groups` require unified=True")
-    contribs = []
-    for name, lane in lanes.items():
-        w_val = float(weights.get(name, 1.0))
-        order = [F.desc(F.round(F.col(score_col), ROUND_DP)), F.asc(id_col)]
-        if group_col not in lane.columns:
-            if groups is None:
-                raise ValueError(
-                    f"lane {name!r} has no {group_col!r} column; pass"
-                    " `groups` to replicate a query-independent lane"
-                )
-            if lane_limit is not None:
-                ranked1 = top_k_ranked(lane, order, lane_limit, rank_col="_rank")
-            else:
-                w_full = Window.partitionBy(_GPART).orderBy(*order)
-                ranked1 = _const_partition(lane).withColumn(
-                    "_rank", F.row_number().over(w_full)
-                )
-            # the group-id set is definitionally small (it IS the query
-            # batch): broadcast it straight into the replication join —
-            # same data movement as folding the ids to literals, without
-            # the driver collect or the 10⁴-literal expression tree that
-            # strains codegen at large batches (ADVICE r8). The join is
-            # on a materialized constant-0 key (`_const_partition`'s
-            # non-foldable spark_partition_id()*0 — a literal key gets
-            # constant-folded back into a nested-loop cross join) so it
-            # plans a BroadcastHashJoin with a bounded build side rather
-            # than the BNLJ shape the plan audit rightly treats as a
-            # scale smell.
-            gsel = groups.select(F.col(group_col).alias("_g")).distinct()
-            ranked = (
-                _const_partition(
-                    ranked1.select(F.col(id_col).alias("_id"), "_rank")
-                )
-                .join(F.broadcast(_const_partition(gsel)), _GPART)
-                .drop(_GPART)
-            )
-            contribs.append(
-                ranked.select(
-                    "_g",
-                    "_id",
-                    (
-                        F.lit(w_val) / (F.lit(float(rrf_k)) + F.col("_rank"))
-                    ).alias("_contrib"),
-                )
-            )
-            continue
-        ranked = lane.select(
-            F.col(group_col).alias("_g"),
-            F.col(id_col).alias("_id"),
-            F.col(score_col).alias(score_col),
-        ).withColumn(
-            "_rank",
-            F.row_number().over(
-                Window.partitionBy("_g").orderBy(
-                    F.desc(F.round(F.col(score_col), ROUND_DP)), F.asc("_id")
-                )
-            ),
-        )
-        if lane_limit is not None:
-            ranked = ranked.filter(F.col("_rank") <= lane_limit)
-        contribs.append(
-            ranked.select(
-                "_g",
-                "_id",
-                (F.lit(w_val) / (F.lit(float(rrf_k)) + F.col("_rank"))).alias(
-                    "_contrib"
-                ),
-            )
-        )
-    unioned = contribs[0]
-    for c in contribs[1:]:
-        unioned = unioned.unionByName(c)
-    fused = unioned.groupBy("_g", "_id").agg(
-        F.round(F.sum("_contrib"), ROUND_DP).alias("rrf_score")
-    )
-    out = fused.select(
-        F.col("_g").alias(group_col), F.col("_id").alias(id_col), "rrf_score"
-    )
-    if limit is not None:
-        w_final = Window.partitionBy(group_col).orderBy(
-            F.desc("rrf_score"), F.asc(id_col)
-        )
-        out = out.withColumn("rank", F.row_number().over(w_final)).filter(
-            F.col("rank") <= limit
-        )
-    return out
-
-
-def _rrf_fuse_grouped_unified(
-    lanes: dict[str, DataFrame],
-    weights: dict[str, float],
-    rrf_k: int,
-    group_col: str,
-    id_col: str,
-    score_col: str,
-    lane_limit: int | None,
-    limit: int | None,
-    groups,
-    tagged: DataFrame | None,
-    lane_col: str,
-    carry_cols: tuple[str, ...],
-) -> DataFrame:
-    """One-window-pass body of rrf_fuse_grouped(unified=True) — see
-    its docstring.
+    Plan shape. ALL grouped lanes rank in ONE window pass over a
+    lane-tagged union, partitioned by (group, lane), instead of one
+    window subtree per lane: per-lane windows each paid their own
+    exchange + sort + query-stage barrier over the same melted corpus
+    projection, and those chained stage barriers (4-6 ms real CPU per
+    task) were the warm wall of batch recall.
 
     With a lane_limit the fusion pays TWO bounded exchanges total:
     every lane — grouped lanes, the pre-melted `tagged` frame, AND
@@ -436,26 +170,20 @@ def _rrf_fuse_grouped_unified(
     EnsureRequirements so the rank filter keeps its WindowGroupLimit
     PARTIAL mode — every input partition truncates to lane_limit per
     (group, lane) BEFORE the shuffle; an explicit repartition here
-    would plan Final-only and let unbounded hit rows concentrate (the
-    r13 first cut did exactly that). The rank-filtered CANDIDATE set
-    then repartitions once on the group id alone, which satisfies (by
-    the subset rule) both the (group, id) fusion aggregate and the
-    final per-group rank — in-partition sorts, no further exchange.
-    r12\'s shape paid a window exchange per lane plus two more for
-    fuse + final rank; the r12 REST-metrics diagnosis showed those
-    chained query-stage barriers (4-6 ms real CPU per task) WERE the
-    warm wall.
+    would plan Final-only and let unbounded hit rows concentrate. The
+    rank-filtered CANDIDATE set then repartitions once on the group
+    id alone, which satisfies (by the subset rule) both the
+    (group, id) fusion aggregate and the final per-group rank —
+    in-partition sorts, no further exchange. Nothing is corpus-sized
+    per task.
 
     Without a lane_limit, lanes are unbounded: grouped lanes rank
     under a spreading (group, lane) exchange and query-independent
-    lanes rank once and replicate post-rank (the legacy contract).
-
-    `groups` may be a list/tuple of literal group ids (the fixed-
-    batch case): replication is then an exploded literal array — no
-    distinct, no broadcast build, no join. A DataFrame replicates
-    via the broadcast join on a materialized constant key (see the
-    legacy path\'s comment for why the key must be non-foldable).
+    lanes rank once (one deliberate partition) and replicate
+    post-rank — folding them into the grouped window would put
+    corpus × queries rows through the exchange.
     """
+    weights = weights or {}
     lit_groups = None
     if isinstance(groups, (list, tuple)):
         lit_groups = sorted(set(groups))
@@ -485,7 +213,14 @@ def _rrf_fuse_grouped_unified(
         parts.append(_tag(tagged, F.col(lane_col)))
 
     def _replicate(df: DataFrame, cols: list[str]) -> DataFrame:
-        """Cross the (bounded) df with the group-id set."""
+        """Cross the (bounded) df with the group-id set: an exploded
+        literal array for literal ids. A DataFrame of ids is
+        definitionally small (it IS the query batch), so it is
+        broadcast into a join on a materialized constant-0 key
+        (`_const_partition`'s non-foldable spark_partition_id()*0 — a
+        literal key gets constant-folded back into a nested-loop cross
+        join): a BroadcastHashJoin with a bounded build side, not the
+        BNLJ shape the plan audit treats as a scale smell."""
         if lit_groups is not None:
             return df.select(
                 F.explode(

@@ -29,7 +29,7 @@ from mnemo_spark import params as P
 from mnemo_spark.io import local_frame, localize_small
 from mnemo_spark.operators.bm25 import bm25_score
 from mnemo_spark.operators.recall_core import recall_scored
-from mnemo_spark.operators.rrf import rrf_fuse_wide
+from mnemo_spark.operators.rrf import rrf_fuse_grouped
 from mnemo_spark.operators.window_ops import top_k_ranked
 from mnemo_spark.registry import _BM25_CTES, _t, query
 
@@ -99,20 +99,44 @@ def hybrid_recall_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     All three lane scores are projections over ONE cached per-doc
     statistics frame (operators/recall_core.py — a single corpus pass
-    replaces the r4 per-lane aggregation cascades), and the per-lane
-    top-k + fusion run as ONE plan (rrf_fuse_wide's two-phase top-k)
-    with provenance carried through — no per-lane jobs, no join back
-    against the corpus."""
+    replaces per-lane aggregation cascades). One explode melts that
+    wide frame into a lane-tagged frame of one literal query — the
+    shape recall_batch_docs builds for a batch — so the per-lane
+    top-k + fusion run as ONE rrf_fuse_grouped plan, with provenance
+    carried through: no per-lane jobs, no join back against the
+    corpus."""
     scored = recall_scored(spark, sf_dir)
-    fused = rrf_fuse_wide(
-        scored,
-        {
-            "bm25": ("bm25", P.RECALL_WEIGHTS["bm25"]),
-            "embed": ("cos", P.RECALL_WEIGHTS["embed"]),
-            "length": ("length_score", P.RECALL_WEIGHTS["length"]),
-        },
+    lane_cols = {"bm25": "bm25", "embed": "cos", "length": "length_score"}
+    entry = F.explode(
+        F.array(
+            *[
+                F.struct(F.lit(name).alias("lane"), F.col(col).alias("score"))
+                for name, col in lane_cols.items()
+            ]
+        )
+    )
+    melted = (
+        scored.select(
+            F.lit(0).alias("query_id"), "doc_id", "source", entry.alias("_e")
+        )
+        .select(
+            "query_id",
+            "doc_id",
+            "source",
+            F.col("_e.lane").alias("lane"),
+            F.col("_e.score").alias("score"),
+        )
+        .filter(F.col("score").isNotNull())
+    )
+    fused = rrf_fuse_grouped(
+        {},
+        P.RECALL_WEIGHTS,
         P.RRF_K,
+        group_col="query_id",
+        id_col="doc_id",
         lane_limit=P.RECALL_LANE_OVERFETCH * P.RECALL_LIMIT,
+        tagged=melted,
+        lane_col="lane",
         carry_cols=("source",),
     )
     trust = F.when(F.col("source").isin(*P.TRUSTED_SOURCES), 1.0).otherwise(0.1)
@@ -269,8 +293,6 @@ def recall_batch_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (WindowGroupLimit-bounded) and the fusion aggregation. Nothing is
     corpus-sized on one task."""
     import math
-
-    from mnemo_spark.operators.rrf import rrf_fuse_grouped
 
     terms = sorted({t for _, ts in _BATCH_QUERIES for t in ts})
     perdoc = _batch_perdoc(spark, sf_dir)
@@ -500,8 +522,6 @@ def recall_batch_graph_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     lead-graph's degree ≤2 bounds every frontier), so the edge table
     never shuffles and the fusion windows run over local relations."""
     from pyspark.sql import Window
-
-    from mnemo_spark.operators.rrf import rrf_fuse_grouped
 
     docs = _t(spark, sf_dir, "documents")
     # the SAME artifact recall_batch_docs uses — one per-doc stats

@@ -13,6 +13,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_mem() -> str:
+    """Half of physical memory in whole GiB, clamped to 1-16g: the JVM
+    heap and the Python workers must both fit the host (a 16g heap
+    does not fit a 15 GB box). MNEMO_SPARK_DRIVER_MEM overrides it."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(16, phys // (2 << 30)))}g"
+
+
 def get_spark(app_name: str = "mnemo_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -38,7 +46,10 @@ def get_spark(app_name: str = "mnemo_spark", cpus: int | None = None) -> SparkSe
         # µs timestamp (truncation, matching DuckDB's µs internal type)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("MNEMO_SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("MNEMO_SPARK_DRIVER_MEM") or default_driver_mem(),
+        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -867,3 +867,24 @@ def test_chain_seq_continues_across_batches(spark):
     seqs = {r["id"]: r["chain_seq"] for r in eng.memories.collect()}
     assert seqs == {"c1": 1, "c2": 2, "c3": 3}
     assert eng.verify_integrity().filter(F.col("n_breaks") > 0).count() == 0
+
+
+def test_acls_direct_assignment_clears_flag(spark):
+    """`eng.acls = grants` (the raw-mutation idiom) must not leave
+    _acls_known_empty stale — granted memories were hidden."""
+    from mnemo_spark.engine import ACL_SCHEMA
+
+    t0 = dt.datetime(2025, 1, 1, tzinfo=dt.timezone.utc)
+    mems = spark.createDataFrame(
+        [("m1", "alice", "secret fact", "semantic", "private", 0.5, [], t0)],
+        "id string, agent_id string, content string, memory_type string,"
+        " scope string, importance float, tags array<string>,"
+        " created_at timestamp",
+    )
+    eng = MnemoSparkEngine(spark).remember_batch(mems)
+    assert eng.visible_to("bob").count() == 0
+    eng.acls = spark.createDataFrame(
+        [("m1", "bob", "read", None)], ACL_SCHEMA
+    )
+    assert eng._acls_known_empty is False
+    assert eng.visible_to("bob").filter(F.col("id") == "m1").count() == 1

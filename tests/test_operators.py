@@ -5,14 +5,18 @@ deterministic tiebreaks)."""
 from __future__ import annotations
 
 import hashlib
+import math
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from mnemo_spark.functions.similarity import cosine
 from mnemo_spark.functions.text import shingles, token_estimate, tokens
+from mnemo_spark.io import load_table
 from mnemo_spark.operators.chain import assign_chain, chain_heads, verify_chain
-from mnemo_spark.operators.rrf import rrf_fuse
+from mnemo_spark.operators.rrf import rrf_fuse, rrf_fuse_grouped
 from mnemo_spark.operators.window_ops import (
     evidence_budget_prefix,
     sessionize,
@@ -67,6 +71,203 @@ def test_rrf_weighted(spark):
     assert rows[2] == pytest.approx(1 / 31, abs=1e-6)
 
 
+def _rrf_reference(lanes, weights=None, rrf_k=60, lane_limit=None, limit=None):
+    """Plain-Python weighted RRF (query/retrieval.rs:7-29).
+
+    lanes: name -> [(id, score)]. Each lane ranks 1-based by
+    (round(score, 6) desc, id asc) and keeps its top lane_limit when
+    set; fused(id) = round(Σ_lanes w / (rrf_k + rank), 6) with weights
+    defaulting to 1.0. -> [(id, rrf_score, rank)] by (score desc, id
+    asc), the top `limit` when set."""
+    weights = weights or {}
+    terms: dict = {}
+    for name, rows in lanes.items():
+        ranked = sorted(rows, key=lambda r: (-round(r[1], 6), r[0]))
+        for rank, (i, _s) in enumerate(ranked[:lane_limit], start=1):
+            terms.setdefault(i, []).append(weights.get(name, 1.0) / (rrf_k + rank))
+    fused = sorted(
+        ((i, round(math.fsum(t), 6)) for i, t in terms.items()),
+        key=lambda r: (-r[1], r[0]),
+    )
+    return [(i, s, rank) for rank, (i, s) in enumerate(fused[:limit], start=1)]
+
+
+RRF_SETTINGS = settings(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+
+# tie-prone lane scores: None = the doc is not in the lane; 1.0000004
+# rounds to 1.0 at 6 dp, so it ties with 1.0 and the id breaks the tie.
+# None is one value in six, so most lanes run longer than lane_limit
+_lane_score = st.sampled_from([None, 0.25, 1.0, 1.0000004, 2.5, 7.0])
+
+
+@given(
+    docs=st.lists(st.tuples(*[_lane_score] * 5), min_size=1, max_size=12),
+    lane_limit=st.one_of(st.none(), st.integers(min_value=1, max_value=8)),
+    limit=st.one_of(st.none(), st.integers(min_value=1, max_value=6)),
+)
+@RRF_SETTINGS
+def test_rrf_matches_reference(spark, docs, lane_limit, limit):
+    """rrf_fuse and every form of rrf_fuse_grouped fuse exactly like
+    the plain-Python reference: two grouped lanes `a`/`b` per query
+    plus a query-independent prior `c`, with null lane membership,
+    6-dp score ties, lane_limit None or 1-8 and an optional limit.
+    The grouped forms are (1) a lanes dict with `groups` as a
+    distributed DataFrame (broadcast-join replication of `c`) and (2)
+    a pre-melted `tagged` frame with a `source` carry column and
+    `groups` as a literal list."""
+    w = {"a": 6.0, "b": 3.0}  # `c` weighs the default 1.0
+    qids = ["q1", "q2"]
+    # docs[i] = (a@q1, b@q1, a@q2, b@q2, c)
+    lane_rows = {
+        (q, lane): [(i, d[col]) for i, d in enumerate(docs) if d[col] is not None]
+        for col, (q, lane) in enumerate(
+            [("q1", "a"), ("q1", "b"), ("q2", "a"), ("q2", "b")]
+        )
+    }
+    prior = [(i, d[4]) for i, d in enumerate(docs) if d[4] is not None]
+    want = {
+        q: _rrf_reference(
+            {"a": lane_rows[q, "a"], "b": lane_rows[q, "b"], "c": prior},
+            w, rrf_k=30, lane_limit=lane_limit, limit=limit,
+        )
+        for q in qids
+    }
+
+    def src(i):
+        return f"s{i % 3}"
+
+    prior_df = spark.createDataFrame(
+        [(i, src(i), s) for i, s in prior], "doc_id int, source string, score double"
+    )
+    long = spark.createDataFrame(
+        [(q, i, src(i), lane, s) for (q, lane), rows in lane_rows.items() for i, s in rows],
+        "query_id string, doc_id int, source string, lane string, score double",
+    )
+
+    # the one-query form
+    q1 = {
+        "a": long.filter("query_id = 'q1' AND lane = 'a'"),
+        "b": long.filter("query_id = 'q1' AND lane = 'b'"),
+        "c": prior_df,
+    }
+    got = rrf_fuse(q1, w, rrf_k=30, lane_limit=lane_limit, limit=limit)
+    assert sorted(tuple(r) for r in got.collect()) == sorted(want["q1"])
+
+    def expected(with_source):
+        rows = set()
+        for q in qids:
+            for i, score, rank in want[q]:
+                row = (q, i, score) + ((rank,) if limit is not None else ())
+                rows.add(row + ((src(i),) if with_source else ()))
+        return rows
+
+    cols = ["query_id", "doc_id", "rrf_score"] + (["rank"] if limit is not None else [])
+    kw = dict(rrf_k=30, lane_limit=lane_limit, limit=limit)
+
+    # lanes dict; groups as a distributed (non-LocalRelation) frame
+    groups_df = spark.range(1, 3).select(
+        F.concat(F.lit("q"), F.col("id").cast("string")).alias("query_id")
+    )
+    by_dict = rrf_fuse_grouped(
+        {
+            "a": long.filter("lane = 'a'").select("query_id", "doc_id", "score"),
+            "b": long.filter("lane = 'b'").select("query_id", "doc_id", "score"),
+            "c": prior_df.select("doc_id", "score"),
+        },
+        w, groups=groups_df, **kw,
+    )
+    assert {tuple(r[c] for c in cols) for r in by_dict.collect()} == expected(False)
+
+    # tagged + carry_cols; groups as literal ids
+    by_tagged = rrf_fuse_grouped(
+        {"c": prior_df}, w, groups=qids, tagged=long, lane_col="lane",
+        carry_cols=("source",), **kw,
+    )
+    got_t = {tuple(r[c] for c in cols + ["source"]) for r in by_tagged.collect()}
+    assert got_t == expected(True)
+
+
+@pytest.fixture(scope="module")
+def grouped_lanes(spark, sf_dir):
+    """Per-query grouped lanes + one query-independent prior, built
+    from the batch per-doc stats frame (the recall_batch_docs shape)."""
+    docs = load_table(spark, sf_dir, "documents")
+    qids = spark.createDataFrame([("q1",), ("q2",), ("q3",)], "query_id string")
+    # deterministic synthetic per-(query, doc) scores: cheap, covers
+    # ties and per-query rank divergence
+    base = docs.select(
+        "doc_id", "source", F.col("n_chars").cast("double").alias("len_score")
+    )
+    grouped = base.crossJoin(F.broadcast(qids)).select(
+        "query_id",
+        "doc_id",
+        "source",
+        F.round(
+            F.pmod(
+                F.xxhash64("doc_id", "query_id").cast("double"), F.lit(997.0)
+            )
+            / 997.0,
+            6,
+        ).alias("score"),
+    )
+    return {
+        "lex": grouped.filter(F.col("score") > 0.25),
+        "sem": grouped.filter(F.col("score") < 0.75).withColumn(
+            "score", F.round(1.0 - F.col("score"), 6)
+        ),
+        "length": base.select(
+            "doc_id", "source", F.col("len_score").alias("score")
+        ),
+    }, qids
+
+
+def _rows(df, cols=None):
+    cols = cols or df.columns
+    return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+def test_rrf_grouped_tagged_carry_equiv(grouped_lanes):
+    """The tagged-melt + carry_cols form (recall_batch_docs' shape)
+    must equal the lanes-dict form with a corpus join-back."""
+    lanes, qids = grouped_lanes
+    tagged = lanes["lex"].select(
+        "query_id", "doc_id", "source", F.lit("lex").alias("lane"), "score"
+    ).unionByName(
+        lanes["sem"].select(
+            "query_id", "doc_id", "source", F.lit("sem").alias("lane"), "score"
+        )
+    )
+    w = {"lex": 3.0, "sem": 6.0, "length": 1.0}
+    kw = dict(
+        group_col="query_id", id_col="doc_id", lane_limit=25, limit=10,
+        groups=qids,
+    )
+    # literal group ids exercise the exploded-literal replication path
+    kw_lit = dict(kw, groups=["q1", "q2", "q3"])
+    via_tagged = rrf_fuse_grouped(
+        {"length": lanes["length"]},
+        w,
+        60,
+        tagged=tagged,
+        lane_col="lane",
+        carry_cols=("source",),
+        **kw_lit,
+    )
+    via_dict = rrf_fuse_grouped(
+        {k: v.drop("source") for k, v in lanes.items()}, w, 60, **kw
+    )
+    cols = ["query_id", "doc_id", "rrf_score", "rank"]
+    assert _rows(via_tagged, cols) == _rows(via_dict, cols)
+    # the carry column matches the source of record
+    src = {r["doc_id"]: r["source"] for r in lanes["length"].collect()}
+    for r in via_tagged.collect():
+        assert r["source"] == src[r["doc_id"]]
+
+
 def _chain_df(spark):
     rows = [
         ("a", 1, "h1"),
@@ -118,6 +319,35 @@ def test_verify_chain_detects_tamper(spark):
     ).filter(F.col("agent") == "a").first()
     assert bad["n_breaks"] >= 1
     assert bad["first_break_at"]["seq"] == 2
+
+
+def test_fold_partitions_groups_span_arrow_batches(spark):
+    """The partition-stream fold (io.fold_partitions) must produce
+    byte-identical chains when a group spans multiple Arrow batches:
+    force 7-row batches against 40-row groups and compare with the
+    same fold run group-at-a-time."""
+    rows = [
+        (f"agent-{i % 3}", i, f"h{i:04d}")
+        for i in range(120)
+    ]
+    df = spark.createDataFrame(rows, "agent string, seq long, h string")
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    try:
+        got = {
+            (r["agent"], r["seq"]): (r["prev_hash"], r["chain_hash"])
+            for r in assign_chain(df, ["agent"], ["seq"], "h").collect()
+        }
+    finally:
+        if old is not None:
+            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    # driver-side reference fold
+    prev: dict = {}
+    for agent, seq, h in sorted(rows):
+        p = prev.get(agent, "")
+        link = hashlib.sha256((h + p).encode()).hexdigest()
+        assert got[(agent, seq)] == (p, link), (agent, seq)
+        prev[agent] = link
 
 
 def test_evidence_budget_is_prefix(spark):

@@ -569,8 +569,9 @@ def test_code_mode_savings_scan_prunes_columns(plans):
 
 def test_hybrid_recall_is_single_pass_over_documents(plans):
     """r5 recall core: every lane score derives from ONE per-doc
-    statistics frame (recall_core.py) and fusion runs in-plan
-    (rrf_fuse_wide) — documents may appear at most twice in the plan
+    statistics frame (recall_core.py) and fusion runs in-plan (one
+    lane-tagged rrf_fuse_grouped window over the melted frame) —
+    documents may appear at most twice in the plan
     (token branch + attribute branch of the left join) and only the
     FINAL top-k plans TakeOrderedAndProject; per-lane top-k jobs or a
     join back against the corpus for provenance would regress the

@@ -336,58 +336,6 @@ def test_incremental_rollup_invariant_to_cutoff(spark, n, cut_frac):
     assert a == b
 
 
-@given(
-    wide=st.lists(
-        st.tuples(
-            st.one_of(st.none(), st.floats(min_value=0.1, max_value=5.0)),
-            st.one_of(st.none(), st.floats(min_value=0.1, max_value=5.0)),
-            st.floats(min_value=0.1, max_value=5.0),
-        ),
-        min_size=1,
-        max_size=14,
-    ),
-    lane_limit=st.integers(min_value=1, max_value=8),
-)
-@SETTINGS
-def test_rrf_fuse_wide_matches_per_lane_path(spark, wide, lane_limit):
-    """rrf_fuse_wide's single-plan two-phase top-k must fuse EXACTLY
-    like the per-lane rank_lane + union path (rrf_fuse with
-    lane_limit) on the same scores — including null lane membership
-    and rank ties broken by id."""
-    from mnemo_spark.operators.rrf import rrf_fuse_wide
-
-    rows = [
-        (i, None if a is None else round(a, 3),
-         None if b is None else round(b, 3), round(c, 3))
-        for i, (a, b, c) in enumerate(wide)
-    ]
-    scored = spark.createDataFrame(
-        rows, "doc_id int, s_a double, s_b double, s_c double"
-    )
-    weights = {"a": 6.0, "b": 3.0, "c": 1.0}
-    got = {
-        (r["doc_id"]): r["rrf_score"]
-        for r in rrf_fuse_wide(
-            scored,
-            {"a": ("s_a", 6.0), "b": ("s_b", 3.0), "c": ("s_c", 1.0)},
-            rrf_k=30,
-            lane_limit=lane_limit,
-        ).collect()
-    }
-    lanes = {
-        name: scored.filter(F.col(col).isNotNull()).select(
-            "doc_id", F.col(col).alias("score")
-        )
-        for name, col in [("a", "s_a"), ("b", "s_b"), ("c", "s_c")]
-    }
-    want = {
-        r["doc_id"]: r["rrf_score"]
-        for r in rrf_fuse(lanes, weights, rrf_k=30,
-                          lane_limit=lane_limit).collect()
-    }
-    assert got == want
-
-
 # -- distributed global-order operators ≡ naive single-partition forms ----
 #
 # global_cumsum / global_ntile replace `Window.orderBy(...)` (a

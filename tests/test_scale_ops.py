@@ -273,3 +273,21 @@ def test_cached_persist_keyed_by_session_and_clearable(spark, monkeypatch):
     cache.clear()
     assert cache._CACHE == {}
     assert a.storageLevel.useMemory is False  # actually unpersisted
+
+
+def test_simhash_salt_grid_matches_unsalted(spark, sf_dir, monkeypatch):
+    """Both lanes of simhash_near_dup_pairs' adaptive grid salt return
+    the same pairs: a threshold of 0 forces the salt=8 grid, 10**18
+    the salt=1 plain band join (the threshold is read at call time)."""
+    from mnemo_spark.operators import dedup
+
+    docs = load_table(spark, sf_dir, "documents")
+    got = {}
+    for threshold, salted in ((0, True), (10**18, False)):
+        monkeypatch.setattr(dedup, "_SALT_PAIRS", threshold)
+        pairs = dedup.simhash_near_dup_pairs(docs, max_hamming=1, bands=2)
+        analyzed = pairs._jdf.queryExecution().analyzed().toString()
+        assert ("_s1" in analyzed) is salted, threshold
+        got[salted] = sorted(tuple(r) for r in pairs.collect())
+    assert got[True], "no near-dup pairs: the comparison would be vacuous"
+    assert got[True] == got[False]

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import math
 import os
 import sys
 
@@ -7,6 +8,9 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import functions as F  # noqa: E402
+
+from mnemo_spark.io import load_table  # noqa: E402
 from mnemo_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("MNEMO_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -25,3 +29,65 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def _rrf_reference(lanes, weights=None, rrf_k=60, lane_limit=None, limit=None):
+    """Plain-Python weighted RRF (query/retrieval.rs:7-29).
+
+    lanes: name -> [(id, score)]. Each lane ranks 1-based by
+    (round(score, 6) desc, id asc) and keeps its top lane_limit when
+    set; fused(id) = round(Σ_lanes w / (rrf_k + rank), 6) with weights
+    defaulting to 1.0. -> [(id, rrf_score, rank)] by (score desc, id
+    asc), the top `limit` when set."""
+    weights = weights or {}
+    terms: dict = {}
+    for name, rows in lanes.items():
+        ranked = sorted(rows, key=lambda r: (-round(r[1], 6), r[0]))
+        for rank, (i, _s) in enumerate(ranked[:lane_limit], start=1):
+            terms.setdefault(i, []).append(weights.get(name, 1.0) / (rrf_k + rank))
+    fused = sorted(
+        ((i, round(math.fsum(t), 6)) for i, t in terms.items()),
+        key=lambda r: (-r[1], r[0]),
+    )
+    return [(i, s, rank) for rank, (i, s) in enumerate(fused[:limit], start=1)]
+
+
+@pytest.fixture(scope="session")
+def rrf_reference():
+    """The plain-Python RRF every fusion test checks the operators
+    against."""
+    return _rrf_reference
+
+
+@pytest.fixture(scope="module")
+def grouped_lanes(spark, sf_dir):
+    """Per-query grouped lanes + one query-independent prior, built
+    from the batch per-doc stats frame (the recall_batch_docs shape)."""
+    docs = load_table(spark, sf_dir, "documents")
+    qids = spark.createDataFrame([("q1",), ("q2",), ("q3",)], "query_id string")
+    # deterministic synthetic per-(query, doc) scores: cheap, covers
+    # ties and per-query rank divergence
+    base = docs.select(
+        "doc_id", "source", F.col("n_chars").cast("double").alias("len_score")
+    )
+    grouped = base.crossJoin(F.broadcast(qids)).select(
+        "query_id",
+        "doc_id",
+        "source",
+        F.round(
+            F.pmod(
+                F.xxhash64("doc_id", "query_id").cast("double"), F.lit(997.0)
+            )
+            / 997.0,
+            6,
+        ).alias("score"),
+    )
+    return {
+        "lex": grouped.filter(F.col("score") > 0.25),
+        "sem": grouped.filter(F.col("score") < 0.75).withColumn(
+            "score", F.round(1.0 - F.col("score"), 6)
+        ),
+        "length": base.select(
+            "doc_id", "source", F.col("len_score").alias("score")
+        ),
+    }, qids

@@ -5,7 +5,6 @@ deterministic tiebreaks)."""
 from __future__ import annotations
 
 import hashlib
-import math
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -14,7 +13,6 @@ from pyspark.sql import functions as F
 
 from mnemo_spark.functions.similarity import cosine
 from mnemo_spark.functions.text import shingles, token_estimate, tokens
-from mnemo_spark.io import load_table
 from mnemo_spark.operators.chain import assign_chain, chain_heads, verify_chain
 from mnemo_spark.operators.rrf import rrf_fuse, rrf_fuse_grouped
 from mnemo_spark.operators.window_ops import (
@@ -71,27 +69,6 @@ def test_rrf_weighted(spark):
     assert rows[2] == pytest.approx(1 / 31, abs=1e-6)
 
 
-def _rrf_reference(lanes, weights=None, rrf_k=60, lane_limit=None, limit=None):
-    """Plain-Python weighted RRF (query/retrieval.rs:7-29).
-
-    lanes: name -> [(id, score)]. Each lane ranks 1-based by
-    (round(score, 6) desc, id asc) and keeps its top lane_limit when
-    set; fused(id) = round(Σ_lanes w / (rrf_k + rank), 6) with weights
-    defaulting to 1.0. -> [(id, rrf_score, rank)] by (score desc, id
-    asc), the top `limit` when set."""
-    weights = weights or {}
-    terms: dict = {}
-    for name, rows in lanes.items():
-        ranked = sorted(rows, key=lambda r: (-round(r[1], 6), r[0]))
-        for rank, (i, _s) in enumerate(ranked[:lane_limit], start=1):
-            terms.setdefault(i, []).append(weights.get(name, 1.0) / (rrf_k + rank))
-    fused = sorted(
-        ((i, round(math.fsum(t), 6)) for i, t in terms.items()),
-        key=lambda r: (-r[1], r[0]),
-    )
-    return [(i, s, rank) for rank, (i, s) in enumerate(fused[:limit], start=1)]
-
-
 RRF_SETTINGS = settings(
     max_examples=12,
     deadline=None,
@@ -110,7 +87,7 @@ _lane_score = st.sampled_from([None, 0.25, 1.0, 1.0000004, 2.5, 7.0])
     limit=st.one_of(st.none(), st.integers(min_value=1, max_value=6)),
 )
 @RRF_SETTINGS
-def test_rrf_matches_reference(spark, docs, lane_limit, limit):
+def test_rrf_matches_reference(spark, rrf_reference, docs, lane_limit, limit):
     """rrf_fuse and every form of rrf_fuse_grouped fuse exactly like
     the plain-Python reference: two grouped lanes `a`/`b` per query
     plus a query-independent prior `c`, with null lane membership,
@@ -130,7 +107,7 @@ def test_rrf_matches_reference(spark, docs, lane_limit, limit):
     }
     prior = [(i, d[4]) for i, d in enumerate(docs) if d[4] is not None]
     want = {
-        q: _rrf_reference(
+        q: rrf_reference(
             {"a": lane_rows[q, "a"], "b": lane_rows[q, "b"], "c": prior},
             w, rrf_k=30, lane_limit=lane_limit, limit=limit,
         )
@@ -189,40 +166,6 @@ def test_rrf_matches_reference(spark, docs, lane_limit, limit):
     )
     got_t = {tuple(r[c] for c in cols + ["source"]) for r in by_tagged.collect()}
     assert got_t == expected(True)
-
-
-@pytest.fixture(scope="module")
-def grouped_lanes(spark, sf_dir):
-    """Per-query grouped lanes + one query-independent prior, built
-    from the batch per-doc stats frame (the recall_batch_docs shape)."""
-    docs = load_table(spark, sf_dir, "documents")
-    qids = spark.createDataFrame([("q1",), ("q2",), ("q3",)], "query_id string")
-    # deterministic synthetic per-(query, doc) scores: cheap, covers
-    # ties and per-query rank divergence
-    base = docs.select(
-        "doc_id", "source", F.col("n_chars").cast("double").alias("len_score")
-    )
-    grouped = base.crossJoin(F.broadcast(qids)).select(
-        "query_id",
-        "doc_id",
-        "source",
-        F.round(
-            F.pmod(
-                F.xxhash64("doc_id", "query_id").cast("double"), F.lit(997.0)
-            )
-            / 997.0,
-            6,
-        ).alias("score"),
-    )
-    return {
-        "lex": grouped.filter(F.col("score") > 0.25),
-        "sem": grouped.filter(F.col("score") < 0.75).withColumn(
-            "score", F.round(1.0 - F.col("score"), 6)
-        ),
-        "length": base.select(
-            "doc_id", "source", F.col("len_score").alias("score")
-        ),
-    }, qids
 
 
 def _rows(df, cols=None):

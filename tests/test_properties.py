@@ -336,6 +336,79 @@ def test_incremental_rollup_invariant_to_cutoff(spark, n, cut_frac):
     assert a == b
 
 
+@given(
+    wide=st.lists(
+        st.tuples(
+            st.one_of(st.none(), st.floats(min_value=0.1, max_value=5.0)),
+            st.one_of(st.none(), st.floats(min_value=0.1, max_value=5.0)),
+            st.floats(min_value=0.1, max_value=5.0),
+        ),
+        min_size=1,
+        max_size=14,
+    ),
+    lane_limit=st.integers(min_value=1, max_value=8),
+)
+@SETTINGS
+def test_rrf_fuse_wide_matches_per_lane_path(spark, rrf_reference, wide, lane_limit):
+    """A wide per-doc score frame melted with one explode into a
+    lane-tagged frame of one literal query (hybrid_recall_docs' shape)
+    must fuse EXACTLY like the per-lane rrf_fuse path on the same
+    scores, and both like the plain-Python reference — including null
+    lane membership and rank ties broken by id."""
+    from mnemo_spark.operators.rrf import rrf_fuse_grouped
+
+    rows = [
+        (i, None if a is None else round(a, 3),
+         None if b is None else round(b, 3), round(c, 3))
+        for i, (a, b, c) in enumerate(wide)
+    ]
+    scored = spark.createDataFrame(
+        rows, "doc_id int, s_a double, s_b double, s_c double"
+    )
+    weights = {"a": 6.0, "b": 3.0, "c": 1.0}
+    lane_cols = {"a": "s_a", "b": "s_b", "c": "s_c"}
+    entry = F.explode(
+        F.array(
+            *[
+                F.struct(F.lit(name).alias("lane"), F.col(col).alias("score"))
+                for name, col in lane_cols.items()
+            ]
+        )
+    )
+    tagged = (
+        scored.select(F.lit(0).alias("query_id"), "doc_id", entry.alias("_e"))
+        .select("query_id", "doc_id", "_e.lane", "_e.score")
+        .filter(F.col("score").isNotNull())
+    )
+    got = {
+        r["doc_id"]: r["rrf_score"]
+        for r in rrf_fuse_grouped(
+            {}, weights, rrf_k=30, group_col="query_id", id_col="doc_id",
+            lane_limit=lane_limit, tagged=tagged, lane_col="lane",
+        ).collect()
+    }
+    lanes = {
+        name: scored.filter(F.col(col).isNotNull()).select(
+            "doc_id", F.col(col).alias("score")
+        )
+        for name, col in lane_cols.items()
+    }
+    want = {
+        r["doc_id"]: r["rrf_score"]
+        for r in rrf_fuse(lanes, weights, rrf_k=30,
+                          lane_limit=lane_limit).collect()
+    }
+    assert got == want
+    ref = rrf_reference(
+        {
+            name: [(r[0], r[k]) for r in rows if r[k] is not None]
+            for k, name in enumerate(lane_cols, start=1)
+        },
+        weights, rrf_k=30, lane_limit=lane_limit,
+    )
+    assert want == {i: s for i, s, _rank in ref}
+
+
 # -- distributed global-order operators ≡ naive single-partition forms ----
 #
 # global_cumsum / global_ntile replace `Window.orderBy(...)` (a

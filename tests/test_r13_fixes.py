@@ -1,33 +1,23 @@
-"""Round-13 regression gates.
+"""RRF fusion on corpus-scale lanes.
 
-1. VERDICT r12 #1 — unified one-window-pass lane ranking in
-   rrf_fuse / rrf_fuse_grouped must be row-identical to the legacy
-   per-lane-subtree shape (kept as the executable spec behind
-   unified=False), including the tagged-melt + carry_cols form
-   recall_batch_docs now uses.
-2. VERDICT r12 #2 — the chunked-EWMA carry is a range-frame window
-   over the agent partition, never a join (the r12 equi-join
-   regressed shallow histories 0.30 → 0.75 s).
-3. ADVICE r12 — direct `eng.acls = grants` assignment must clear the
-   structural-emptiness flag (stale flag silently hid granted
-   memories); track_pin dedupes plan-equal handles.
+rrf_fuse and rrf_fuse_grouped rank every lane in one window pass;
+these gates check that pass against the plain-Python reference RRF
+(conftest `rrf_reference`) on lanes built from the test corpus —
+real BM25 / cosine / length-prior scores for one query, and
+synthetic per-query scores with ties for three — where the
+hypothesis property in test_operators.py runs on a dozen rows.
 """
 
 from __future__ import annotations
 
-from datetime import datetime, timezone
-
 import pytest
 from pyspark.sql import functions as F
 
-from mnemo_spark import params as P
-from mnemo_spark.io import load_table
 from mnemo_spark.operators.rrf import rrf_fuse, rrf_fuse_grouped
 
 
-def _rows(df, cols=None):
-    cols = cols or df.columns
-    return sorted(tuple(r[c] for c in cols) for r in df.collect())
+def _pairs(df):
+    return [(r["doc_id"], r["score"]) for r in df.collect()]
 
 
 @pytest.fixture(scope="module")
@@ -51,221 +41,45 @@ def doc_lanes(spark, sf_dir):
 
 
 @pytest.mark.parametrize("lane_limit", [30, None])
-def test_rrf_fuse_unified_equiv(doc_lanes, lane_limit):
+def test_rrf_fuse_unified_equiv(doc_lanes, rrf_reference, lane_limit):
     w = {"bm25": 3.0, "embed": 6.0, "length": 1.0}
-    new = rrf_fuse(doc_lanes, w, 60, lane_limit=lane_limit, limit=20)
-    old = rrf_fuse(
-        doc_lanes, w, 60, lane_limit=lane_limit, limit=20, unified=False
+    got = rrf_fuse(doc_lanes, w, 60, lane_limit=lane_limit, limit=20)
+    want = rrf_reference(
+        {name: _pairs(df) for name, df in doc_lanes.items()},
+        w, 60, lane_limit=lane_limit, limit=20,
     )
-    assert _rows(new) == _rows(old)
-
-
-@pytest.fixture(scope="module")
-def grouped_lanes(spark, sf_dir):
-    """Per-query grouped lanes + one query-independent prior, built
-    from the batch per-doc stats frame (the recall_batch_docs shape)."""
-    docs = load_table(spark, sf_dir, "documents")
-    qids = spark.createDataFrame([("q1",), ("q2",), ("q3",)], "query_id string")
-    # deterministic synthetic per-(query, doc) scores: cheap, covers
-    # ties and per-query rank divergence
-    base = docs.select(
-        "doc_id", "source", F.col("n_chars").cast("double").alias("len_score")
-    )
-    grouped = base.crossJoin(F.broadcast(qids)).select(
-        "query_id",
-        "doc_id",
-        "source",
-        F.round(
-            F.pmod(
-                F.xxhash64("doc_id", "query_id").cast("double"), F.lit(997.0)
-            )
-            / 997.0,
-            6,
-        ).alias("score"),
-    )
-    return {
-        "lex": grouped.filter(F.col("score") > 0.25),
-        "sem": grouped.filter(F.col("score") < 0.75).withColumn(
-            "score", F.round(1.0 - F.col("score"), 6)
-        ),
-        "length": base.select(
-            "doc_id", "source", F.col("len_score").alias("score")
-        ),
-    }, qids
+    assert len(want) == 20
+    assert sorted(tuple(r) for r in got.collect()) == sorted(want)
 
 
 @pytest.mark.parametrize("lane_limit", [25, None])
-def test_rrf_fuse_grouped_unified_equiv(grouped_lanes, lane_limit):
+def test_rrf_fuse_grouped_unified_equiv(
+    spark, grouped_lanes, rrf_reference, lane_limit
+):
     lanes, qids = grouped_lanes
     plain = {k: v.drop("source") for k, v in lanes.items()}
     w = {"lex": 3.0, "sem": 6.0, "length": 1.0}
-    kw = dict(
+    got = rrf_fuse_grouped(
+        plain,
+        w,
+        60,
         group_col="query_id",
         id_col="doc_id",
         lane_limit=lane_limit,
         limit=10,
         groups=qids,
     )
-    new = rrf_fuse_grouped(plain, w, 60, **kw)
-    old = rrf_fuse_grouped(plain, w, 60, unified=False, **kw)
-    cols = ["query_id", "doc_id", "rrf_score", "rank"]
-    assert _rows(new, cols) == _rows(old, cols)
-
-
-def test_rrf_grouped_tagged_carry_equiv(grouped_lanes):
-    """The tagged-melt + carry_cols form (recall_batch_docs' shape)
-    must equal the lanes-dict form with a corpus join-back."""
-    lanes, qids = grouped_lanes
-    tagged = lanes["lex"].select(
-        "query_id", "doc_id", "source", F.lit("lex").alias("lane"), "score"
-    ).unionByName(
-        lanes["sem"].select(
-            "query_id", "doc_id", "source", F.lit("sem").alias("lane"), "score"
-        )
-    )
-    w = {"lex": 3.0, "sem": 6.0, "length": 1.0}
-    kw = dict(
-        group_col="query_id", id_col="doc_id", lane_limit=25, limit=10,
-        groups=qids,
-    )
-    # literal group ids exercise the exploded-literal replication path
-    kw_lit = dict(kw, groups=["q1", "q2", "q3"])
-    via_tagged = rrf_fuse_grouped(
-        {"length": lanes["length"]},
-        w,
-        60,
-        tagged=tagged,
-        lane_col="lane",
-        carry_cols=("source",),
-        **kw_lit,
-    )
-    via_dict = rrf_fuse_grouped(
-        {k: v.drop("source") for k, v in lanes.items()}, w, 60, **kw
-    )
-    cols = ["query_id", "doc_id", "rrf_score", "rank"]
-    assert _rows(via_tagged, cols) == _rows(via_dict, cols)
-    # the carry column matches the source of record
-    src = {r["doc_id"]: r["source"] for r in lanes["length"].collect()}
-    for r in via_tagged.collect():
-        assert r["source"] == src[r["doc_id"]]
-
-
-def test_baseline_carry_is_join_free(spark):
-    """VERDICT r12 #2: the chunk-carry must come from a range-frame
-    window over the agent partition — no join anywhere in the plan,
-    at any history depth."""
-    from mnemo_spark.baseline import baseline_deltas
-
-    t0 = datetime(2025, 1, 1, tzinfo=timezone.utc)
-    rows = [
-        ("a1", t0.replace(hour=h % 24, day=1 + h // 24), float(h % 7))
-        for h in range(48)
-    ]
-    profiles = spark.createDataFrame(
-        rows, "agent_id string, window_start timestamp, recall_rate_per_min double"
-    )
-    out = baseline_deltas(profiles, alpha=0.3)
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert "Join" not in plan, plan
-    out.count()  # executes
-
-
-def test_acls_direct_assignment_clears_flag(spark):
-    """ADVICE r12: `eng.acls = grants` (the raw-mutation idiom) must
-    not leave _acls_known_empty stale — granted memories were hidden."""
-    from mnemo_spark.engine import ACL_SCHEMA, MnemoSparkEngine
-
-    t0 = datetime(2025, 1, 1, tzinfo=timezone.utc)
-    mems = spark.createDataFrame(
-        [("m1", "alice", "secret fact", "semantic", "private", 0.5, [], t0)],
-        "id string, agent_id string, content string, memory_type string,"
-        " scope string, importance float, tags array<string>,"
-        " created_at timestamp",
-    )
-    eng = MnemoSparkEngine(spark).remember_batch(mems)
-    assert eng.visible_to("bob").count() == 0
-    eng.acls = spark.createDataFrame(
-        [("m1", "bob", "read", None)], ACL_SCHEMA
-    )
-    assert eng._acls_known_empty is False
-    assert eng.visible_to("bob").filter(F.col("id") == "m1").count() == 1
-
-
-def test_track_pin_dedupes_plan_equal(spark):
-    from mnemo_spark import cache
-
-    cache.clear()
-    n0 = len(cache._ONESHOT_PINS)
-    for _ in range(5):
-        df = spark.range(100).withColumn("v", F.col("id") * 2)
-        cache.track_pin(df).count()
-        df.unpersist()
-    assert len(cache._ONESHOT_PINS) == n0 + 1
-    cache.clear()
-
-
-def test_fold_partitions_groups_span_arrow_batches(spark):
-    """The partition-stream fold (io.fold_partitions) must produce
-    byte-identical chains when a group spans multiple Arrow batches:
-    force 7-row batches against 40-row groups and compare with the
-    same fold run group-at-a-time."""
-    import hashlib
-
-    from mnemo_spark.operators.chain import assign_chain
-
-    rows = [
-        (f"agent-{i % 3}", i, f"h{i:04d}")
-        for i in range(120)
-    ]
-    df = spark.createDataFrame(rows, "agent string, seq long, h string")
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-    try:
-        got = {
-            (r["agent"], r["seq"]): (r["prev_hash"], r["chain_hash"])
-            for r in assign_chain(df, ["agent"], ["seq"], "h").collect()
+    prior = _pairs(plain["length"])
+    want = set()
+    for q in [r["query_id"] for r in qids.collect()]:
+        per_query = {
+            name: _pairs(plain[name].filter(F.col("query_id") == q))
+            for name in ("lex", "sem")
         }
-    finally:
-        if old is not None:
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    # driver-side reference fold
-    prev: dict = {}
-    for agent, seq, h in sorted(rows):
-        p = prev.get(agent, "")
-        link = hashlib.sha256((h + p).encode()).hexdigest()
-        assert got[(agent, seq)] == (p, link), (agent, seq)
-        prev[agent] = link
-
-
-def test_compact_pin_sizes_to_true_bytes(spark):
-    """_size_coalesced must size a compact pin to the frame's TRUE
-    bytes even when (a) Catalyst's estimate inflates on explode/agg
-    lineage (orders of magnitude: the bm25 tf artifact estimated ~274
-    GB at 85 KB true) and (b) df.rdd.getNumPartitions() reports the
-    AQE-coalesced view that a persisted plan does NOT inherit
-    (canChangeCachedPlanOutputPartitioning=false) — the two failure
-    modes that left small artifacts pinned as shuffle.partitions
-    near-empty blocks (r13)."""
-    from mnemo_spark import cache
-
-    cache.clear()
-    with cache.serving():
-        # explode/agg lineage: tiny true size, inflated estimate
-        df = (
-            spark.range(2000)
-            .select(F.explode(F.sequence(F.lit(0), F.lit(4))).alias("e"), "id")
-            .groupBy((F.col("id") % 50).alias("k"))
-            .agg(F.count("*").alias("n"))
+        fused = rrf_reference(
+            dict(per_query, length=prior), w, 60, lane_limit=lane_limit, limit=10
         )
-        pinned = cache.cached_persist(df, "r13_true_size_pin", compact=True)
-        pinned.count()  # materialize the cached layout
-        # assert on the pinned frame DIRECTLY (ADVICE r13: the old
-        # storage-info scan matched ANY small cached RDD, so the gate
-        # could pass vacuously off an unrelated pin). The persisted
-        # plan's own partitioning is what the coalesce must reach.
-        pin_parts = pinned.rdd.getNumPartitions()
-        assert pin_parts <= 2, (
-            f"50-row compact pin materialized at {pin_parts} blocks "
-            "- the true-size coalesce did not reach the cached plan"
-        )
-    cache.clear(force=True)
+        assert len(fused) == 10
+        want |= {(q, i, s, rank) for i, s, rank in fused}
+    cols = ["query_id", "doc_id", "rrf_score", "rank"]
+    assert {tuple(r[c] for c in cols) for r in got.collect()} == want

@@ -20,6 +20,7 @@ wasm metering is the `wasm`-feature follow-up even upstream).
 from __future__ import annotations
 
 import math
+import re
 import time
 from dataclasses import dataclass, field
 
@@ -145,9 +146,11 @@ class SparkDocStore:
         self._content = content_col
 
     def recall(self, query: str, k: int) -> list[tuple[str, str, float]]:
+        from mnemo_spark.functions.text import TOKEN_PATTERN
         from mnemo_spark.operators.bm25 import bm25_topk
 
-        terms = [t for t in (query or "").lower().split() if t]
+        # the corpus tokenizer: "Quick, fox?" asks for quick and fox
+        terms = re.findall(TOKEN_PATTERN, (query or "").lower())
         hits = bm25_topk(
             self._docs, terms, k=k, id_col=self._id, text_col=self._content
         )

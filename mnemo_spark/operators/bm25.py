@@ -2,19 +2,30 @@
 
 The reference maintains a Tantivy BM25 index
 (crates/mnemo-core/src/search/tantivy_index.rs:119-180, SURVEY §2.3
-A6). Spark-first design: BM25 is just three aggregations over the
-corpus — document frequency, average doc length, per-(doc,term) term
-frequency — so it's computed relationally per query batch and Catalyst
-plans it. Corpus stats are tiny (one row per query term + one global
-row) and broadcast into the scoring join.
+A6). Spark-first design: BM25 is three corpus statistics — document
+count N, average doc length, per-term document frequency — plus the
+per-(doc, term) term frequency, so it is computed relationally per
+query batch and Catalyst plans it.
+
+One scorer, two plans. `batch_bm25` scores a query DataFrame; a
+single query (`bm25_score`, `bm25_topk`) is a batch of one over a
+driver-side one-row query frame. A small batch runs the wide form
+(`batch_bm25_wide`): one explode → groupBy(doc) pass builds a per-doc
+frame with the doc length `_dl` and one conditional count `_tf<i>`
+per batch term; `bm25_literal_scorer` collects N, avgdl and every df
+from it in one 1-row aggregate and inlines the idf values as
+literals, so each query's score is a projection. The recall core
+(operators/recall_core.py) and recall_batch_docs score their own
+per-doc frames through the same helper. An open-ended batch runs the
+distributed term-join form, where the statistics are broadcast frames
+and the idf is a column expression.
 
 Scale notes (100 TB): the expensive stage is the explode(tokens) →
-groupBy(doc,term) map-side-combinable aggregation; it shuffles once on
-(doc_id). df/avgdl are per-corpus scalars — compute once per corpus
-snapshot, persist, and reuse across query batches (the reference
-caches them inside Tantivy the same way). Filtering explode output to
-query terms FIRST keeps the shuffle proportional to matching tokens,
-not corpus tokens.
+groupBy aggregation; it shuffles once on the doc id and is map-side
+combined. The per-doc frame (wide form) or the postings table (join
+form, serving sessions) is the index segment: under the serving cache
+it persists per corpus and later batches reuse it (the reference
+caches the same statistics inside Tantivy).
 
 Scoring: score(d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1−b+b·|d|/avgdl))
 idf(t) = ln(1 + (N − df + 0.5)/(df + 0.5))   (Robertson-Sparck Jones,
@@ -23,15 +34,63 @@ the same form Tantivy/Lucene use).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import math
+from typing import Callable, Sequence
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mnemo_spark.functions.text import tokens
+from mnemo_spark.io import local_relation
 from mnemo_spark.operators.window_ops import top_k_ranked
 
 ROUND_DP = 6  # all ranked scores are rounded before ordering so that
 # rank ties break identically in Spark and the DuckDB oracle (SURVEY
 # §7 "RRF rank ties" — deterministic tiebreak score desc, id asc).
+
+
+def bm25_literal_scorer(
+    perdoc: DataFrame, n_terms: int, k1: float, b: float
+) -> Callable[[Sequence[int]], Column]:
+    """BM25 over a per-doc frame with a doc length `_dl` and term
+    counts `_tf0.._tf<n_terms-1>` (both null for token-less docs).
+
+    The corpus scalars (N, avgdl, each term's df) are one 1-row
+    aggregate, collected here at plan-build time and inlined as
+    literals. Returns `score(term_indices)`: the 6-dp BM25 column of
+    those terms, summed in the order given, null for a doc that holds
+    none of them. An empty corpus has no avgdl; its scores are a null
+    literal, so the caller's projection is an empty frame."""
+    stats = perdoc.agg(
+        F.count("*").alias("_n"),
+        F.avg(F.coalesce(F.col("_dl"), F.lit(0))).alias("_avgdl"),
+        *[
+            F.count(F.when(F.col(f"_tf{i}") > 0, True)).alias(f"_df{i}")
+            for i in range(n_terms)
+        ],
+    ).first()
+    if stats["_n"] == 0:
+        return lambda term_indices: F.lit(None).cast("double")
+    n, avgdl = float(stats["_n"]), float(stats["_avgdl"])
+    idf = [
+        math.log(1.0 + (n - df + 0.5) / (df + 0.5))
+        for df in (float(stats[f"_df{i}"]) for i in range(n_terms))
+    ]
+    norm = k1 * (1 - b + b * F.col("_dl") / F.lit(avgdl))
+
+    def score(term_indices: Sequence[int]) -> Column:
+        total, hits = None, F.lit(0)
+        for i in term_indices:
+            tf = F.col(f"_tf{i}")
+            hits = hits + F.coalesce(tf, F.lit(0))
+            # the guard keeps a zero/null tf out of the division
+            c = F.when(
+                tf > 0, F.lit(idf[i]) * (tf * (k1 + 1)) / (tf + norm)
+            ).otherwise(F.lit(0.0))
+            total = c if total is None else total + c
+        return F.when(hits > 0, F.round(total, ROUND_DP))
+
+    return score
 
 
 def bm25_score(
@@ -42,111 +101,18 @@ def bm25_score(
     k1: float = 1.2,
     b: float = 0.75,
 ) -> DataFrame:
-    """Score every doc containing ≥1 query term. → (id, bm25)."""
-    from mnemo_spark.cache import cached_persist, cached_value, serving_enabled
+    """Score every doc containing ≥1 query term. → (id, bm25).
 
-    toks = docs.select(
-        F.col(id_col).alias("_id"), tokens(text_col).alias("_tok")
+    `batch_bm25` over a one-row driver-side query frame, without the
+    query id: its head collect costs no Spark job, and the batch
+    picks the plan (wide form up to WIDE_MAX_TERMS distinct terms)."""
+    q = local_relation(
+        docs.sparkSession,
+        [(0, list(query_terms))],
+        "_qid int, _terms array<string>",
     )
-    # doc lengths are an index-time corpus statistic (Tantivy stores
-    # them per segment); caching them saves a full re-tokenization per
-    # scoring call — at scale this is the persisted lengths table
-    lens = cached_persist(toks.select("_id", F.size("_tok").alias("_dl")), "bm25_lens", compact=True)
-    stats = cached_persist(
-        lens.agg(F.count("*").alias("_n"), F.avg("_dl").alias("_avgdl")),
-        "bm25_stats",
-    )
-
-    term_lit = F.array(*[F.lit(t) for t in query_terms])
-    # keep only query-term occurrences before the shuffle. Explode
-    # FIRST, filter after: the exploded filter is whole-stage-codegen'd
-    # array_contains on a literal, while the equivalent array-filter
-    # higher-order function is interpreted per token (~2x the query)
-    hits = toks.select("_id", F.explode("_tok").alias("_term")).filter(
-        F.array_contains(term_lit, F.col("_term"))
-    )
-    # the cached posting table carries the doc length INLINE — the
-    # per-(doc,term) tf join with per-doc lengths runs once at index
-    # build, so a scoring call is posting-scan → broadcast df/stats →
-    # one groupBy shuffle, exactly a Lucene segment read. Under the
-    # bench cache it persists once per (corpus, terms).
-    tf = cached_persist(
-        hits.groupBy("_id", "_term")
-        .agg(F.count("*").alias("_tf"))
-        .join(lens, "_id"),
-        "bm25_tf",
-        compact=True,
-    )
-    # corpus-level term stats are a handful of rows — cache them as ONE
-    # partition so the broadcast-build stage launches 1 task, not 32
-    df_ = cached_persist(
-        tf.groupBy("_term").agg(F.countDistinct("_id").alias("_df")).coalesce(1),
-        "bm25_df",
-    )
-
-    if serving_enabled():
-        # corpus-scalar inlining (r13, guide §1/§2 barrier paydown): the
-        # per-term idf and avgdl are a handful of doubles derived from
-        # the tiny cached df/stats artifacts, yet joining them as frames
-        # costs two broadcast-build jobs (= two scheduler barriers) on
-        # EVERY scoring call. Collect them ONCE per (corpus, terms) —
-        # computed by the SAME JVM F.log expression, so the doubles are
-        # bit-identical to the broadcast-join path — memoized under the
-        # serving-value doctrine (cache.cached_value, keyed on the tf
-        # artifact's plan), and inline them as literals: a warm scoring
-        # call is then postings-scan → one groupBy — no broadcast joins.
-        def _collect_idf():
-            return [
-                (r["_term"], r["_idf"], r["_avgdl"])
-                for r in df_.crossJoin(stats)
-                .select(
-                    "_term",
-                    F.log(
-                        F.lit(1.0)
-                        + (F.col("_n") - F.col("_df") + 0.5) / (F.col("_df") + 0.5)
-                    ).alias("_idf"),
-                    "_avgdl",
-                )
-                .collect()
-            ]
-
-        vals = cached_value(_collect_idf, "bm25_idf", key_plan=tf)
-        if vals and vals[0][2] is not None:
-            avgdl = float(vals[0][2])
-            idf_map = F.create_map(
-                *[x for t, i, _a in vals for x in (F.lit(t), F.lit(float(i)))]
-            )
-            scored = (
-                tf.withColumn("_idf", idf_map[F.col("_term")])
-                .withColumn(
-                    "_contrib",
-                    F.col("_idf")
-                    * (F.col("_tf") * (k1 + 1))
-                    / (F.col("_tf") + k1 * (1 - b + b * F.col("_dl") / F.lit(avgdl))),
-                )
-                .groupBy("_id")
-                .agg(F.round(F.sum("_contrib"), ROUND_DP).alias("bm25"))
-            )
-            return scored.select(F.col("_id").alias(id_col), "bm25")
-        # empty corpus/terms (avgdl NULL): fall through to the join
-        # path, which yields the same empty result frame
-    scored = (
-        tf.join(F.broadcast(df_), "_term")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "_idf",
-            F.log(F.lit(1.0) + (F.col("_n") - F.col("_df") + 0.5) / (F.col("_df") + 0.5)),
-        )
-        .withColumn(
-            "_contrib",
-            F.col("_idf")
-            * (F.col("_tf") * (k1 + 1))
-            / (F.col("_tf") + k1 * (1 - b + b * F.col("_dl") / F.col("_avgdl"))),
-        )
-        .groupBy("_id")
-        .agg(F.round(F.sum("_contrib"), ROUND_DP).alias("bm25"))
-    )
-    return scored.select(F.col("_id").alias(id_col), "bm25")
+    out = batch_bm25(docs, q, id_col, text_col, "_qid", "_terms", k1, b)
+    return out.drop("_qid")
 
 
 def bm25_topk(
@@ -195,10 +161,9 @@ def batch_bm25_wide(
     definitionally-small-query-side move the dense lane's kernel makes
     (engine._dot_lane). The whole batch's term universe becomes
     conditional counts in a single explode → groupBy(doc) aggregation
-    (map-side combined, one shuffle); corpus scalars (N, avgdl,
-    per-term df) are one 1-row aggregate collected at plan-build time
-    and inlined as idf literals; every query's score is then a pure
-    projection over the per-doc frame, emitted together via one
+    (map-side combined, one shuffle); `bm25_literal_scorer` inlines
+    the corpus scalars as idf literals, so every query's score is a
+    pure projection over the per-doc frame, emitted together via one
     explode of per-query structs. Two shuffles total, independent of
     batch size. → (query_id, doc_id, bm25), rows only for docs
     containing ≥1 of the query's terms (the join-form/oracle
@@ -208,8 +173,6 @@ def batch_bm25_wide(
     term-universe) — the index-segment artifact, shared by later
     batches over the same corpus.
     """
-    import math
-
     from mnemo_spark.cache import cached_persist
 
     def _empty_result() -> DataFrame:
@@ -237,7 +200,18 @@ def batch_bm25_wide(
             ),
         )
 
-    terms = sorted({t for _, qts in query_rows for t in qts})
+    # merge duplicate query ids (the join form's qterms DISTINCT
+    # unions their term sets — two rows for q1 must not emit two
+    # scores) and drop term-less queries (the join form loses them in
+    # its qterms explode)
+    merged: dict = {}
+    for qid, qts in query_rows:
+        merged.setdefault(qid, set()).update(qts or [])
+    scored_rows = [(qid, sorted(qts)) for qid, qts in merged.items() if qts]
+    if not scored_rows:
+        return _empty_result()
+
+    terms = sorted({t for _, qts in scored_rows for t in qts})
     tok = docs.select(
         F.col(id_col).alias("_id"), tokens(text_col).alias("_tok")
     )
@@ -252,83 +226,29 @@ def batch_bm25_wide(
             ],
         )
     )
-    # token-less docs keep a (dl=0) row: they never score, but they
-    # count in N and avgdl exactly as the join form's lens frame does
+    # token-less docs keep a row with null stats: they never score,
+    # but they count in N and avgdl exactly as the join form's lens
+    # frame does
     perdoc = cached_persist(
-        docs.select(F.col(id_col).alias("_id"))
-        .join(perdoc_tok, "_id", "left")
-        .na.fill(0),
+        docs.select(F.col(id_col).alias("_id")).join(perdoc_tok, "_id", "left"),
         "bm25_wide_perdoc",
         tuple(terms),
         compact=True,
     )
-    stats = perdoc.agg(
-        F.count("*").alias("_n"),
-        F.avg("_dl").alias("_avgdl"),
-        *[
-            F.count(F.when(F.col(f"_tf{i}") > 0, True)).alias(f"_df{i}")
-            for i in range(len(terms))
-        ],
-    ).first()
-    if stats["_n"] == 0 or stats["_avgdl"] is None:
-        # empty corpus: avg(_dl) is NULL and the idf/score math is
-        # undefined — return the same empty frame the join form's
-        # explode would (ADVICE r11 medium: float(None) raised here,
-        # reachable via recall_batch lexical/hybrid lanes on an empty
-        # memory store with a ≤4-query batch)
-        return _empty_result()
-    n, avgdl = float(stats["_n"]), float(stats["_avgdl"])
-    idf = {
-        t: math.log(1.0 + (n - float(stats[f"_df{i}"]) + 0.5) / (float(stats[f"_df{i}"]) + 0.5))
-        for i, t in enumerate(terms)
-    }
+    score = bm25_literal_scorer(perdoc, len(terms), k1, b)
     ti = {t: i for i, t in enumerate(terms)}
-
-    def _score(qterms) -> "F.Column":
-        contribs = [
-            F.lit(idf[t])
-            * (F.col(f"_tf{ti[t]}") * (k1 + 1))
-            / (
-                F.col(f"_tf{ti[t]}")
-                + k1 * (1 - b + b * F.col("_dl") / F.lit(avgdl))
-            )
-            for t in qterms
-        ]
-        total = contribs[0]
-        for c in contribs[1:]:
-            total = total + c
-        return F.round(total, ROUND_DP)
-
-    def _hits(qterms) -> "F.Column":
-        return sum(
-            (F.col(f"_tf{ti[t]}") for t in qterms), F.lit(0)
-        )
-
-    # merge duplicate query ids (the join form's qterms DISTINCT
-    # unions their term sets — two rows for q1 must not emit two
-    # scores) and drop term-less queries (the join form loses them in
-    # its qterms explode)
-    merged: dict = {}
-    for qid, qts in query_rows:
-        merged.setdefault(qid, set()).update(qts or [])
-    scored_rows = [
-        (qid, sorted(qts)) for qid, qts in merged.items() if qts
-    ]
-    if not scored_rows:
-        return _empty_result()
     per_query = F.array(
         *[
             F.struct(
                 F.lit(qid).alias("_qid"),
-                _score(qts).alias("_bm25"),
-                _hits(qts).alias("_nhit"),
+                score([ti[t] for t in qts]).alias("_bm25"),
             )
             for qid, qts in scored_rows
         ]
     )
     return (
         perdoc.select("_id", F.explode(per_query).alias("_q"))
-        .filter(F.col("_q._nhit") > 0)
+        .filter(F.col("_q._bm25").isNotNull())
         .select(
             F.col("_q._qid").alias(qid_col),
             F.col("_id").alias(id_col),
@@ -361,7 +281,8 @@ def batch_bm25(
     (batch_bm25_wide — two shuffles total, the recall_core move);
     open-ended batches keep the distributed term-join form below.
     Both produce identical 6dp-rounded rows (tests/test_operators.py
-    equivalence).
+    checks both against a plain-Python reference). `bm25_score` is a
+    batch of one.
 
     Scale: tokenization + stats are O(corpus) once; the hits join
     shuffles on term with query-term selectivity, so 10⁴ queries cost
@@ -379,7 +300,12 @@ def batch_bm25(
                 docs, rows, id_col, text_col, qid_col, k1, b
             )
 
-    toks = docs.select(F.col(id_col).alias("_id"), tokens(text_col).alias("_tok"))
+    # a null text is a token-less doc (dl 0), as in the wide form;
+    # size() of a null token array is null, which avg() would skip
+    toks = docs.select(
+        F.col(id_col).alias("_id"),
+        tokens(F.coalesce(F.col(text_col), F.lit(""))).alias("_tok"),
+    )
     lens = cached_persist(toks.select("_id", F.size("_tok").alias("_dl")), "bm25_lens", compact=True)
     # (N, avgdl) is a corpus-only scalar pair — cache the 1-row frame
     # so a warm batch pays a 1-row scan, not a lens aggregation job

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from mnemo_spark import params as P
 from mnemo_spark.io import local_frame, localize_small
-from mnemo_spark.operators.bm25 import bm25_score
+from mnemo_spark.operators.bm25 import bm25_literal_scorer, bm25_score
 from mnemo_spark.operators.recall_core import recall_scored
 from mnemo_spark.operators.rrf import rrf_fuse_grouped
 from mnemo_spark.operators.window_ops import top_k_ranked
@@ -292,47 +292,13 @@ def recall_batch_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     literals, and the only per-batch jobs are the per-query lane ranks
     (WindowGroupLimit-bounded) and the fusion aggregation. Nothing is
     corpus-sized on one task."""
-    import math
-
     terms = sorted({t for _, ts in _BATCH_QUERIES for t in ts})
     perdoc = _batch_perdoc(spark, sf_dir)
-    stats = perdoc.agg(
-        F.count("*").alias("n"),
-        F.avg(F.coalesce(F.col("_dl"), F.lit(0))).alias("avgdl"),
-        *[
-            F.count(F.when(F.col(f"_tf{i}") > 0, True)).alias(f"_df{i}")
-            for i in range(len(terms))
-        ],
-    ).first()
-    n_docs, avgdl = float(stats["n"]), float(stats["avgdl"])
-    k1, b = P.BM25_K1, P.BM25_B
-    idf = {
-        t: math.log(
-            1.0
-            + (n_docs - float(stats[f"_df{i}"]) + 0.5)
-            / (float(stats[f"_df{i}"]) + 0.5)
-        )
-        for i, t in enumerate(terms)
-    }
+    score = bm25_literal_scorer(perdoc, len(terms), P.BM25_K1, P.BM25_B)
     tidx = {t: i for i, t in enumerate(terms)}
 
     def bm25_of(qterms):
-        contribs, total_tf = [], F.lit(0)
-        for t in qterms:
-            tf = F.col(f"_tf{tidx[t]}")
-            total_tf = total_tf + F.coalesce(tf, F.lit(0))
-            contribs.append(
-                F.when(
-                    tf > 0,
-                    F.lit(idf[t])
-                    * (tf * (k1 + 1))
-                    / (tf + k1 * (1 - b + b * F.col("_dl") / F.lit(avgdl))),
-                ).otherwise(F.lit(0.0))
-            )
-        s = contribs[0]
-        for c in contribs[1:]:
-            s = s + c
-        return F.when(total_tf > 0, F.round(s, 6))
+        return score([tidx[t] for t in qterms])
 
     # melt the wide per-query scores into ONE long lane-tagged frame:
     # one row per (query, lane, doc score), hits-only (no bm25 row

@@ -361,7 +361,7 @@ def incremental_scan_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TERMS_SQL = ", ".join(f"'{t}'" for t in P.BM25_QUERY_TERMS)
 
 # shared scored-BM25 CTE body (Robertson idf, k1/b from params) — the
-# SQL twin of operators.bm25.bm25_score
+# SQL twin of operators.bm25.bm25_score, a one-query batch_bm25
 _BM25_CTES = f"""
       tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
               FROM documents),

@@ -13,12 +13,18 @@ import os
 from pyspark.sql import SparkSession
 
 
-def default_driver_mem() -> str:
-    """Half of physical memory in whole GiB, clamped to 1-16g: the JVM
-    heap and the Python workers must both fit the host (a 16g heap
-    does not fit a 15 GB box). MNEMO_SPARK_DRIVER_MEM overrides it."""
+def host_heap_gib() -> int:
+    """Half of physical memory in whole GiB, at least 1: the JVM heaps
+    and the Python workers must both fit the host (a 16g heap does
+    not fit a 15 GB box)."""
     phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    return f"{max(1, min(16, phys // (2 << 30)))}g"
+    return max(1, phys // (2 << 30))
+
+
+def default_driver_mem() -> str:
+    """host_heap_gib() capped at 16g. MNEMO_SPARK_DRIVER_MEM overrides
+    it."""
+    return f"{min(16, host_heap_gib())}g"
 
 
 def get_spark(app_name: str = "mnemo_spark", cpus: int | None = None) -> SparkSession:

@@ -2,7 +2,9 @@ from __future__ import annotations
 
 import math
 import os
+import re
 import sys
+from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
 
@@ -10,6 +12,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from mnemo_spark.functions.text import TOKEN_PATTERN  # noqa: E402
 from mnemo_spark.io import load_table  # noqa: E402
 from mnemo_spark.session import get_spark  # noqa: E402
 
@@ -57,6 +60,46 @@ def rrf_reference():
     """The plain-Python RRF every fusion test checks the operators
     against."""
     return _rrf_reference
+
+
+def _round6(x):
+    # Spark's round(double, 6): HALF_UP on the shortest decimal repr
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
+def _bm25_reference(docs, query_terms, k1=1.2, b=0.75):
+    """Plain-Python BM25 (Robertson-Spärck Jones idf, as in Tantivy).
+
+    docs: [(id, text)], tokenised like functions.text.tokens. Each
+    distinct query term t adds idf(t) * tf*(k1+1) / (tf + k1*(1 - b +
+    b*|d|/avgdl)) with idf(t) = ln(1 + (N - df + 0.5)/(df + 0.5));
+    token-less docs count in N and avgdl. -> {id: round(score, 6)},
+    only for docs that contain a query term."""
+    toks = {i: re.findall(TOKEN_PATTERN, (text or "").lower()) for i, text in docs}
+    if not toks:
+        return {}
+    n = len(toks)
+    avgdl = math.fsum(len(t) for t in toks.values()) / n
+    terms = set(query_terms)
+    df = {t: sum(t in tk for tk in toks.values()) for t in terms}
+    out = {}
+    for i, tk in toks.items():
+        parts = [
+            math.log(1.0 + (n - df[t] + 0.5) / (df[t] + 0.5))
+            * tk.count(t) * (k1 + 1)
+            / (tk.count(t) + k1 * (1 - b + b * len(tk) / avgdl))
+            for t in terms
+            if t in tk
+        ]
+        if parts:
+            out[i] = _round6(math.fsum(parts))
+    return out
+
+
+@pytest.fixture(scope="session")
+def bm25_reference():
+    """The plain-Python BM25 every lexical scorer is checked against."""
+    return _bm25_reference
 
 
 @pytest.fixture(scope="module")

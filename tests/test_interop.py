@@ -222,6 +222,8 @@ def test_codemode_spark_store(spark):
     )
     assert len(bundle.recalled) == 2
     assert bundle.recalled[0][0] in {"1", "3"}
+    # punctuation and case tokenise like the corpus: same recall
+    assert store.recall("Quick, fox?", 2) == store.recall("quick fox", 2)
     assert store.cite("1") == "recall://1"
     assert 0.0 <= store.score("1") <= 1.0
 

@@ -168,6 +168,67 @@ def test_rrf_matches_reference(spark, rrf_reference, docs, lane_limit, limit):
     assert got_t == expected(True)
 
 
+# query terms: corpus words, an absent word, and an upper-case word
+# that never matches (the corpus tokens are lower-cased)
+_bm25_term = st.sampled_from(["spark", "join", "window", "query", "absent", "Spark"])
+# doc words: upper case and punctuation tokenise to the corpus words;
+# a null text, an empty word list or a lone "?!" makes a token-less doc
+_bm25_text = st.lists(
+    st.sampled_from(["spark", "Spark,", "JOIN", "join.", "window", "query?", "plan", "x1", "?!"]),
+    max_size=8,
+).map(" ".join)
+
+
+@given(
+    texts=st.lists(st.one_of(st.none(), _bm25_text), max_size=8),
+    queries=st.lists(
+        st.tuples(st.sampled_from(["q1", "q2", "q3"]), st.lists(_bm25_term, max_size=4)),
+        min_size=1,
+        max_size=4,
+    ),
+)
+@RRF_SETTINGS
+def test_bm25_matches_reference(spark, bm25_reference, monkeypatch, texts, queries):
+    """batch_bm25 (wide form and term-join form, forced by
+    WIDE_MAX_QUERIES), bm25_score and the recall core's bm25 column all
+    score like the plain-Python reference: rows only for docs holding a
+    query term, duplicate query ids union their terms, duplicate and
+    absent terms, empty term lists, token-less and null-text docs and
+    an empty corpus."""
+    from mnemo_spark import params as P
+    from mnemo_spark.io import local_relation
+    from mnemo_spark.operators import bm25 as B
+    from mnemo_spark.operators.recall_core import perdoc_stats, scored_from_perdoc
+
+    rows = list(enumerate(texts))
+    # driver-side LocalRelations: no Python-worker tasks per scan
+    docs = local_relation(
+        spark,
+        [(i, t, len(t or ""), "s") for i, t in rows],
+        "doc_id long, text string, n_chars int, source string",
+    )
+    qdf = local_relation(spark, queries, "query_id string, terms array<string>")
+    merged: dict = {}
+    for qid, terms in queries:
+        merged.setdefault(qid, []).extend(terms)
+    want = {
+        (qid, i, s)
+        for qid, terms in merged.items()
+        for i, s in bm25_reference(rows, terms).items()
+    }
+    first = queries[0][1]
+    for wide_max in (8, 0):  # 8: the wide form; 0: the term-join form
+        monkeypatch.setattr(B, "WIDE_MAX_QUERIES", wide_max)
+        assert {tuple(r) for r in B.batch_bm25(docs, qdf).collect()} == want
+        got = {tuple(r) for r in B.bm25_score(docs, first).collect()}
+        assert got == set(bm25_reference(rows, first).items())
+
+    core = scored_from_perdoc(perdoc_stats(docs)).filter("bm25 IS NOT NULL")
+    assert {(r["doc_id"], r["bm25"]) for r in core.collect()} == set(
+        bm25_reference(rows, P.BM25_QUERY_TERMS, P.BM25_K1, P.BM25_B).items()
+    )
+
+
 def _rows(df, cols=None):
     cols = cols or df.columns
     return sorted(tuple(r[c] for c in cols) for r in df.collect())

@@ -82,3 +82,13 @@ def test_streamed_index_matches_batch_survives_rewrite_and_replay(
     _run_stream(spark, src, tx_path, str(tmp_path / "ckpt_replay"), docs.schema)
     assert TxTable(tx_path).latest_version() == v_before
     assert _scored_set(recall_scored_from_index(spark, tx_path)) == got2
+
+
+def test_scored_from_perdoc_empty_corpus(spark, sf_dir):
+    """An empty corpus (an empty maintained index) has no avgdl: the
+    lane scores are an empty frame with the usual columns, not a
+    float(None) error at plan-build time."""
+    empty = load_table(spark, sf_dir, "documents").select(*DOC_COLS).limit(0)
+    out = scored_from_perdoc(perdoc_stats(empty))
+    assert out.columns == ["doc_id", "source", "length_score", "bm25", "cos"]
+    assert out.count() == 0

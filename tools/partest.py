@@ -5,9 +5,13 @@ becoming the round's binding constraint; pytest-xdist is not in the
 sandbox, so this is the dependency-free equivalent).
 
 Design: a dynamic work queue of test files, N worker threads each
-running `pytest <file>` as a subprocess with MNEMO_TEST_CPUS=4 and an
-8g driver (8 workers x local[4] saturates the 32-core box; 8 x 8g
-stays far under the 128 GiB heap). Files are ordered longest-first
+running `pytest <file>` as a subprocess with its own local[c] session
+and heap. N, c and the heap are sized from the host (`host_plan`):
+each worker gets at least 2 cores and 2 GiB, at most 8 workers run,
+and all heaps together stay within half of physical memory — the
+rule session.default_driver_mem applies to one driver. A 4-core
+15 GB box runs 2 x local[2] x 3g; a 32-core 128 GB box 8 x local[4]
+x 8g. Files are ordered longest-first
 from the previous run's recorded durations (tests/.partest_durations
 .json, refreshed every run; file size is the cold-start proxy) so the
 makespan isn't hostage to a long tail. Per-file isolation is CLEANER
@@ -17,6 +21,9 @@ session scope becomes per-file scope).
 
 Exit: non-zero if ANY file fails, errors, or collects zero tests.
 Usage: python tools/partest.py [-jN] [pytest-file-substring ...]
+-jN sets the worker count (cores and heap are then split N ways);
+MNEMO_TEST_CPUS and MNEMO_SPARK_DRIVER_MEM override the per-worker
+cores and heap.
 """
 
 from __future__ import annotations
@@ -35,14 +42,29 @@ TESTS = REPO / "tests"
 DUR_PATH = TESTS / ".partest_durations.json"
 
 
+def host_plan(
+    cpus: int, heap_gib: int, workers: int | None = None
+) -> tuple[int, int, int]:
+    """(workers, cores per worker, heap GiB per worker) for a host with
+    `cpus` cores and `heap_gib` GiB of heap to share out."""
+    if workers is None:
+        workers = max(1, min(8, cpus // 2, heap_gib // 2))
+    return workers, max(1, cpus // workers), max(1, min(16, heap_gib // workers))
+
+
 def main() -> int:
-    workers = 8
+    workers = None
     pats = []
     for a in sys.argv[1:]:
         if a.startswith("-j"):
             workers = int(a[2:])
         else:
             pats.append(a)
+    sys.path.insert(0, str(REPO))
+    from mnemo_spark.session import host_heap_gib
+
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
+    workers, worker_cpus, heap = host_plan(cpus, host_heap_gib(), workers)
     files = sorted(TESTS.glob("test_*.py"))
     if pats:
         files = [f for f in files if any(p in f.name for p in pats)]
@@ -57,8 +79,8 @@ def main() -> int:
 
     env = dict(
         os.environ,
-        MNEMO_TEST_CPUS=os.environ.get("MNEMO_TEST_CPUS", "4"),
-        MNEMO_SPARK_DRIVER_MEM=os.environ.get("MNEMO_SPARK_DRIVER_MEM", "8g"),
+        MNEMO_TEST_CPUS=os.environ.get("MNEMO_TEST_CPUS", str(worker_cpus)),
+        MNEMO_SPARK_DRIVER_MEM=os.environ.get("MNEMO_SPARK_DRIVER_MEM", f"{heap}g"),
     )
     q: Queue = Queue()
     for f in files:

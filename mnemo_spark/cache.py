@@ -101,16 +101,16 @@ _ONESHOT_PINS: dict[tuple, DataFrame] = {}
 
 def track_pin(df: DataFrame, storage_level=None) -> DataFrame:
     """Persist df OUTSIDE a serving session but keep the handle where
-    `clear()` can reclaim it (ADVICE r11: graph expand's one-shot
-    level pins accumulated for the life of the session with no release
-    path). Spark's CacheManager dedupes plan-equal persists; the
-    handle registry dedupes the same way — keyed on the plan's
-    semantic hash (ADVICE r12: an append-only list grew one Python
-    handle per plan-equal expand() call for the process lifetime), so
-    a long-lived non-serving process holds one handle per DISTINCT
-    pinned plan, reclaimed at the next clear(). Callers that can
-    bound a pin's lifetime themselves (materialize-then-release)
-    should unpersist directly and skip the registry."""
+    `clear()` can reclaim it (ADVICE r11: a bare one-shot persist has
+    no release path for the life of the session). Spark's
+    CacheManager dedupes plan-equal persists; the handle registry
+    dedupes the same way — keyed on the plan's semantic hash (ADVICE
+    r12: an append-only list grew one Python handle per plan-equal
+    call for the process lifetime), so a long-lived non-serving
+    process holds one handle per DISTINCT pinned plan, reclaimed at
+    the next clear(). Callers that can bound a pin's lifetime
+    themselves (materialize-then-release) should unpersist directly
+    and skip the registry."""
     try:
         key = (
             df.sparkSession.sparkContext.applicationId,

@@ -6,14 +6,14 @@ and a seen-set. Spark-first: a fixed-depth BFS is N self-joins on the
 edges DataFrame — each hop one equi-join (shuffle on the join key; at
 scale pre-partition/bucket edges by src so hops co-locate), dedup by
 min-hop (`groupBy(id).min(hop)`) instead of a driver-side seen-set.
+
+There is one walk, `expand_grouped`; `expand` is its one-group call.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from mnemo_spark.io import local_frame
 
 ROUND_DP = 6
 
@@ -28,9 +28,7 @@ def expand(
     seed_col: str = "id",
     bidirectional: bool = False,
     dedup_per_hop: bool = True,
-    broadcast_frontier: bool = False,
     broadcast_edges: bool = False,
-    out_degree_1: bool = False,
 ) -> DataFrame:
     """BFS from seed ids along edges, ≤ `hops`, score = decay^hop.
 
@@ -38,213 +36,23 @@ def expand(
     themselves are hop 0 / score 1. Mirrors the reference's dedup-by-
     first-visit and per-hop decay (recall.rs:479-555).
 
-    dedup_per_hop=False skips the per-hop distinct (one shuffle per
-    hop): correct for graphs where paths to a node are unique within
-    a hop — e.g. parent-pointer trees, where out-degree toward the
-    walk direction is ≤1 — the final min-hop groupBy still dedups.
-    broadcast_frontier=True hash-broadcasts the frontier into each
-    hop join so the edge table never shuffles: the right plan when
-    the seed set is small relative to edges (a trace from a handful
-    of roots over a 100-TB event log never moves the log).
-    broadcast_edges=True broadcasts the EDGE table instead — the
-    right plan when the edge set itself is small (ACL delegation
-    tables, checkpoint parents): every hop becomes a map-side
-    broadcast join, so with dedup_per_hop=False the whole walk chains
-    in ONE job with no per-hop shuffle at all. Mutually exclusive
-    with broadcast_frontier; only for edge sets that fit a broadcast.
-
-    out_degree_1=True (r11, VERDICT r10 #4) switches a DEEP walk over
-    a parent-pointer graph (each node ≤1 outgoing edge: checkpoint
-    parents, event predecessors, SCD chains) to binary lifting — the
-    classic parallel list-ranking move: the reach relation
-    (src, dst, hop ≤ 2^k) doubles by composing with itself, so an
-    8-hop walk is 3 self-joins instead of 8 sequential frontier
-    stages, and the self-join's two sides share one exchange
-    (ReusedExchange). Per-node reach is ≤ hops rows (out-degree 1),
-    so the relation is ≤ hops·|V| — the same bound the naive walk's
-    union holds. Results are byte-identical to the naive walk
-    (min-hop semantics are preserved by taking min over compositions;
-    tests/test_r11_fixes.py equivalence). Ignores dedup_per_hop /
-    broadcast_* (the lifting plan has its own shape).
-
-    NOTE (ADVICE r12): with out_degree_1=True and hops ≥ 2 OUTSIDE a
-    serving session, the call is NOT lazy — the doubled reach relation
-    is eagerly materialized (one count() job) at call time so the
-    per-level pins can release immediately (materialize-then-release;
-    a lazy variant would either leak log2(hops) pins or replay the
-    3^levels prefix on every action). The final pin persists
-    MEMORY_AND_DISK, so later eviction degrades to disk reads instead
-    of that unpinned recompute.
-    """
-    if broadcast_edges and broadcast_frontier:
-        raise ValueError("broadcast_edges and broadcast_frontier are exclusive")
-    e = edges.select(F.col(src_col).alias("_s"), F.col(dst_col).alias("_d"))
-    if bidirectional:
-        e = e.unionByName(
-            edges.select(F.col(dst_col).alias("_s"), F.col(src_col).alias("_d"))
-        ).distinct()
-    if out_degree_1:
-        return _expand_lifted(e, seeds, hops, decay, seed_col)
-    if hops > 1:
-        # the edge list is referenced once per hop; persist it so a
-        # derived edge frame (e.g. a window over events) computes once
-        # per plan instead of once per hop (CacheManager keys on the
-        # canonicalized plan, so repeated calls share the entry). In a
-        # serving session (engine.serving() / bench harness) route
-        # through the TRACKED cache so context exit releases it (the
-        # bare persist is bounded by distinct edge plans but survives
-        # clear() — ADVICE r7 class). r13: broadcast_edges mode needs
-        # this MOST — the union-of-layers plan duplicates the hop-k
-        # prefix into every deeper layer, so an unpersisted edge
-        # derivation was re-aggregated by all C(hops+1,2) broadcast
-        # builds (delegation_closure: 6 full events-distinct passes
-        # per execution, measured 13 Spark jobs)
-        from mnemo_spark import cache
-
-        if cache.serving_enabled():
-            e = cache.cached_persist(e, "expand_edges", compact=True)
-        else:
-            e = cache.track_pin(e)  # reclaimable by cache.clear()
-
-    frontier = seeds.select(F.col(seed_col).alias("_id")).distinct().withColumn(
-        "hop", F.lit(0)
-    )
-    layers = [frontier]
-    for h in range(1, hops + 1):
-        fr = F.broadcast(frontier) if broadcast_frontier else frontier
-        hop_edges = F.broadcast(e) if broadcast_edges else e
-        frontier = (
-            fr.join(hop_edges, fr["_id"] == hop_edges["_s"])
-            .select(F.col("_d").alias("_id"))
-        )
-        if dedup_per_hop:
-            frontier = frontier.distinct()
-        frontier = frontier.withColumn("hop", F.lit(h))
-        if h < hops:
-            # every non-final layer is referenced TWICE — as a union
-            # branch of the result and as the next hop's input — and
-            # those are separate DAG subtrees, so without a persist
-            # the hop-h prefix re-executes (hops−h+1) times: hops=3
-            # paid 6 hop joins instead of 3 (r13; the same duplicated-
-            # prefix bug class _expand_lifted pins against). Lazy pin:
-            # blocks materialize during the action's first evaluation
-            # and later branches read them; serving sessions route
-            # through the tracked cache so warm repeats skip the hop
-            # joins entirely and exit releases the blocks.
-            from mnemo_spark import cache
-
-            if cache.serving_enabled():
-                frontier = cache.cached_persist(
-                    frontier, "expand_layer", h, hops, compact=True
-                )
-            else:
-                frontier = cache.track_pin(frontier)
-        layers.append(frontier)
-
-    all_nodes = layers[0]
-    for l in layers[1:]:
-        all_nodes = all_nodes.unionByName(l)
-    return (
-        all_nodes.groupBy("_id")
-        .agg(F.min("hop").alias("hop"))
-        .withColumn("score", F.round(F.pow(F.lit(decay), F.col("hop")), ROUND_DP))
-        .select(F.col("_id").alias(seed_col), "hop", "score")
-    )
-
-
-def _expand_lifted(
-    e: DataFrame,
-    seeds: DataFrame,
-    hops: int,
-    decay: float,
-    seed_col: str,
-) -> DataFrame:
-    """Binary-lifting body of expand(out_degree_1=True): build the
-    (src, dst, min-hop ≤ hops) reach relation by repeated
-    self-composition, then one seed join + the min-hop fold. The
-    min-hop groupBy after every doubling bounds the relation at
-    hops·|V| rows even through cycles (a ring walks onto itself)."""
-    from mnemo_spark import cache
-
-    frontier0 = seeds.select(F.col(seed_col).alias("_id")).distinct()
-    if hops < 1:
-        # seeds only (ADVICE r11: the reach relation's hop=1 rows were
-        # never filtered against hops, so hops=0 returned 1-hop
-        # neighbors — diverging from the naive walk's seeds-only)
-        return frontier0.select(
-            F.col("_id").alias(seed_col),
-            F.lit(0).alias("hop"),
-            F.lit(1.0).alias("score"),
-        )
-    reach = e.select("_s", "_d", F.lit(1).alias("hop"))
-    span = 1
-    level_pins: list[DataFrame] = []
-    while span < hops:
-        # each doubled relation is referenced 3x (union side + both
-        # join sides) under DIFFERENT partitionings, so exchange reuse
-        # cannot dedupe it — pin each level or the build re-executes
-        # the whole prefix per reference (3^levels blowup). One-shot
-        # pins are materialize-then-release: the FINAL relation is
-        # eagerly computed below, after which the intermediate levels
-        # unpersist immediately (ADVICE r11: a bare per-level persist
-        # accumulated log2(hops) pinned frames per call for the life
-        # of the session).
-        if cache.serving_enabled():
-            reach = cache.cached_persist(
-                reach, "expand_lifted", span, hops, compact=True
-            )
-        else:
-            reach = reach.persist()
-            level_pins.append(reach)
-        a, b = reach.alias("a"), reach.alias("b")
-        comp = (
-            a.join(b, F.col("a._d") == F.col("b._s"))
-            .select(
-                F.col("a._s").alias("_s"),
-                F.col("b._d").alias("_d"),
-                (F.col("a.hop") + F.col("b.hop")).alias("hop"),
-            )
-            .filter(F.col("hop") <= hops)
-        )
-        reach = (
-            reach.unionByName(comp)
-            .groupBy("_s", "_d")
-            .agg(F.min("hop").alias("hop"))
-        )
-        span *= 2
-    if cache.serving_enabled():
-        # cache the FINAL reach relation too (r13): it is a statistic
-        # of the corpus alone, and without this entry every warm call
-        # re-ran the last doubling's join + min-hop aggregation (the
-        # intermediate levels were cached but the loop's result was
-        # not — measured as 10 Spark jobs per warm lineage walk)
-        reach = cache.cached_persist(
-            reach, "expand_lifted_final", hops, compact=True
-        )
-    if level_pins:
-        # pin + materialize the final relation so the level pins can
-        # release NOW (they exist only to stop the 3^levels recompute
-        # during this one materialization); the final pin itself is
-        # clear()-reclaimable, and MEMORY_AND_DISK so block eviction
-        # degrades to disk reads instead of the unpinned 3^levels
-        # replay (ADVICE r12)
-        from pyspark import StorageLevel
-
-        reach = cache.track_pin(reach, StorageLevel.MEMORY_AND_DISK)
-        reach.count()
-        for p in level_pins:
-            p.unpersist()
-    frontier = frontier0
-    hits = frontier.join(reach, frontier["_id"] == reach["_s"]).select(
-        F.col("_d").alias("_id"), "hop"
-    )
-    all_nodes = frontier.withColumn("hop", F.lit(0)).unionByName(hits)
-    return (
-        all_nodes.groupBy("_id")
-        .agg(F.min("hop").alias("hop"))
-        .withColumn("score", F.round(F.pow(F.lit(decay), F.col("hop")), ROUND_DP))
-        .select(F.col("_id").alias(seed_col), "hop", "score")
-    )
+    One group of `expand_grouped`: the seeds get a constant group
+    column, which is dropped from the result. See `expand_grouped` for
+    `dedup_per_hop` and `broadcast_edges`."""
+    one = seeds.select(F.lit(0).alias("_one"), F.col(seed_col))
+    return expand_grouped(
+        edges,
+        one,
+        hops=hops,
+        decay=decay,
+        src_col=src_col,
+        dst_col=dst_col,
+        group_col="_one",
+        seed_col=seed_col,
+        bidirectional=bidirectional,
+        dedup_per_hop=dedup_per_hop,
+        broadcast_edges=broadcast_edges,
+    ).drop("_one")
 
 
 def expand_grouped(
@@ -258,7 +66,8 @@ def expand_grouped(
     seed_col: str = "id",
     visible: DataFrame | None = None,
     bidirectional: bool = False,
-    local_frontier_bound: int | None = None,
+    dedup_per_hop: bool = True,
+    broadcast_edges: bool = False,
 ) -> DataFrame:
     """BFS for a BATCH of seed sets — one row per (group, reached id)
     at the minimum hop, score = decay^hop (reference recall.rs:479-555
@@ -270,6 +79,7 @@ def expand_grouped(
     `visible`: optional (id) frame; each hop's frontier semi-joins it,
     so an invisible node neither surfaces NOR bridges to hop n+1 — the
     same per-record permission check the single-query walk applies.
+    Seeds are hop 0 whether or not they are visible.
 
     First-visit dedup is the final min-hop groupBy: a node reached at
     hop 1 and again at hop 2 scores decay^1, identical to the
@@ -278,53 +88,45 @@ def expand_grouped(
     min-hop is unaffected — the seen anti-join is an optimization the
     batch form trades for one fewer shuffle per hop).
 
-    Scale: shuffles are per-hop equi-joins on the edge key over
-    (groups × frontier) rows; the edge table is persisted across hops
-    (tracked in serving sessions). Never corpus × groups — frontiers
-    are seed-bounded and dedup'd per hop.
+    dedup_per_hop=False skips the per-hop distinct (one shuffle per
+    hop): right for graphs where paths to a node are unique within a
+    hop — e.g. parent-pointer trees — and correct on any graph, since
+    the final min-hop groupBy still dedups. broadcast_edges=True
+    broadcasts the EDGE table into every hop join — the right plan
+    when the edge set itself is small (ACL delegation tables): every
+    hop becomes a map-side broadcast join, so with dedup_per_hop=False
+    the whole walk chains in ONE job with no per-hop shuffle.
 
-    local_frontier_bound (r10, VERDICT r9 #1): when the caller can
-    BOUND every hop's frontier (seeds × max-degree^hop provably small
-    — e.g. a lead-graph with degree ≤2, or tree-shaped relations),
-    pass the bound and the walk runs DRIVER-COORDINATED: each hop is
-    one broadcast-hash join of the tiny local frontier against the
-    distributed edge table (edges never shuffle, never collect), the
-    ≤bound result rows hop through the driver where the seen-set /
-    min-hop dedup is a plain dict — the same frontier coordination
-    GraphFrames' BFS and Pregel loops do, with an explicit fail-loud
-    bound instead of a silent driver OOM. Semantics are byte-identical
-    to the lazy path (tests/test_graph_expand.py equivalence); the
-    lazy path ran ~7 shuffle stages with the hop lineage re-executing
-    inside every later hop (plans are trees), which at the local job
-    floor dominated the batched graph recall's latency.
+    Pins: in a serving session (`cache.serving_enabled()`) the edge
+    frame and every non-final layer go through the tracked cache.
+    Each non-final layer is referenced twice — as a union branch of
+    the result and as the next hop's input — and those are separate
+    DAG subtrees, so unpinned the hop-h prefix re-executes hops−h+1
+    times; an unpinned edge derivation (a window or distinct over
+    events) re-runs once per hop. The serving lifecycle releases the
+    blocks. Outside serving nothing is pinned: a one-shot persist per
+    call leaks one block set per call in a long-lived engine.
+
+    Scale: shuffles are per-hop equi-joins on the edge key over
+    (groups × frontier) rows. Never corpus × groups — frontiers are
+    seed-bounded and (with dedup_per_hop) dedup'd per hop.
     """
+    from mnemo_spark import cache
+
     e = edges.select(F.col(src_col).alias("_s"), F.col(dst_col).alias("_d"))
     if bidirectional:
         e = e.unionByName(
             edges.select(F.col(dst_col).alias("_s"), F.col(src_col).alias("_d"))
         )
+    if hops > 1:
+        e = cache.cached_persist(e, "graph_edges", compact=True)
+    if broadcast_edges:
+        e = F.broadcast(e)
     vis = (
         visible.select(F.col(visible.columns[0]).alias("_id")).distinct()
         if visible is not None
         else None
     )
-    if local_frontier_bound is not None:
-        return _expand_grouped_bounded(
-            e, seeds, hops, decay, group_col, seed_col, vis,
-            local_frontier_bound,
-        )
-    if hops > 1:
-        from mnemo_spark import cache
-
-        # serving sessions pin the (undirected) edge frame once per
-        # corpus and the lifecycle drains it; one-shot calls do NOT
-        # persist (r10 — the old unconditional persist() leaked one
-        # block set per call in a serving-less server). One-shot
-        # multi-hop reads of the same edge lineage dedupe via
-        # exchange/stage reuse where plans allow; at cluster scale the
-        # edge frame is a stored table and re-scan is the norm.
-        if cache.serving_enabled():
-            e = cache.cached_persist(e, "expand_grouped_edges", compact=True)
     frontier = (
         seeds.select(
             F.col(group_col).alias("_g"), F.col(seed_col).alias("_id")
@@ -334,14 +136,18 @@ def expand_grouped(
     )
     layers = [frontier]
     for h in range(1, hops + 1):
-        frontier = (
-            frontier.join(e, frontier["_id"] == e["_s"])
-            .select("_g", F.col("_d").alias("_id"))
-            .distinct()
+        frontier = frontier.join(e, frontier["_id"] == e["_s"]).select(
+            "_g", F.col("_d").alias("_id")
         )
+        if dedup_per_hop:
+            frontier = frontier.distinct()
         if vis is not None:
             frontier = frontier.join(vis, "_id", "left_semi")
         frontier = frontier.withColumn("hop", F.lit(h))
+        if h < hops:
+            frontier = cache.cached_persist(
+                frontier, "graph_layer", h, hops, compact=True
+            )
         layers.append(frontier)
     all_nodes = layers[0]
     for l in layers[1:]:
@@ -356,112 +162,6 @@ def expand_grouped(
             "hop",
             "score",
         )
-    )
-
-
-def _expand_grouped_bounded(
-    e: DataFrame,
-    seeds: DataFrame,
-    hops: int,
-    decay: float,
-    group_col: str,
-    seed_col: str,
-    vis: DataFrame | None,
-    bound: int,
-) -> DataFrame:
-    """Driver-coordinated grouped BFS (see expand_grouped's
-    local_frontier_bound). Identical first-visit/min-hop semantics:
-    `seen` maps (group, node) → first hop; only UNSEEN nodes join the
-    next frontier, exactly the single-query walk's seen-set. Each hop
-    is one Spark job: broadcast(frontier) ⋈ edges [⋈ visible], with a
-    hard `bound`-row collect guard (structural bound violated → raise,
-    never OOM)."""
-    spark = seeds.sparkSession
-    gtype = seeds.schema[group_col].dataType
-    itype = seeds.schema[seed_col].dataType
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    fr_schema = StructType(
-        [StructField("_g", gtype, True), StructField("_id", itype, True)]
-    )
-    seed_rows = seeds.select(
-        F.col(group_col).alias("_g"), F.col(seed_col).alias("_id")
-    ).limit(bound + 1).collect()
-    if len(seed_rows) > bound:
-        raise ValueError(
-            f"expand_grouped: seed set exceeds local_frontier_bound={bound}"
-        )
-    seen: dict[tuple, int] = {}
-    for r in seed_rows:
-        seen.setdefault((r["_g"], r["_id"]), 0)
-    frontier = sorted(seen)
-    own_persist = False
-    if hops > 1:
-        from mnemo_spark import cache
-
-        if cache.serving_enabled():
-            # serving sessions pin the edge frame once per corpus —
-            # shared across calls, drained by the session lifecycle
-            e = cache.cached_persist(e, "expand_grouped_edges", compact=True)
-        else:
-            # referenced once per hop as separate eager jobs — persist
-            # for the walk, released before returning (no leak)
-            e = e.persist()
-            own_persist = True
-    try:
-        for h in range(1, hops + 1):
-            if not frontier:
-                break
-            # one broadcast-hash join per hop: the local frontier
-            # broadcasts, the (cached) edge table never shuffles; an
-            # isin-literal adjacency fetch was measured SLOWER (0.40 vs
-            # 0.25 s/hop — the wide In list costs more than the
-            # broadcast build)
-            fdf = local_frame(spark, frontier, fr_schema)
-            nxt = (
-                F.broadcast(fdf)
-                .join(e, fdf["_id"] == e["_s"])
-                .select("_g", F.col("_d").alias("_id"))
-            )
-            if vis is not None:
-                nxt = nxt.join(vis, "_id", "left_semi")
-            # coalesce(1): one mini-job instead of CollectLimit's
-            # incremental 1→4→16→32 partition scans
-            rows = nxt.coalesce(1).limit(bound + 1).collect()
-            if len(rows) > bound:
-                raise ValueError(
-                    f"expand_grouped: hop-{h} frontier exceeds "
-                    f"local_frontier_bound={bound} — the caller's "
-                    "structural bound does not hold; use the "
-                    "distributed path (local_frontier_bound=None)"
-                )
-            frontier = sorted(
-                {
-                    (r["_g"], r["_id"])
-                    for r in rows
-                    if (r["_g"], r["_id"]) not in seen
-                }
-            )
-            for key in frontier:
-                seen[key] = h
-    finally:
-        if own_persist:
-            try:
-                e.unpersist()
-            except Exception:  # noqa: BLE001 - session may be gone
-                pass
-    out_schema = StructType(
-        [
-            StructField(group_col, gtype, True),
-            StructField(seed_col, itype, True),
-            StructField("hop", IntegerType(), True),
-        ]
-    )
-    out = local_frame(
-        spark, [(g, i, h) for (g, i), h in sorted(seen.items())], out_schema
-    )
-    return out.withColumn(
-        "score", F.round(F.pow(F.lit(decay), F.col("hop")), ROUND_DP)
     )
 
 
@@ -498,9 +198,7 @@ def trace_causality(
     else:
         e = edges.select(F.col("_id").alias("_s"), F.col("_p").alias("_d"))
     # parent-pointer DAG: following parents, each node advances to at
-    # most one next node, so per-hop dedup is redundant; roots are a
-    # filtered subset of events, so broadcasting the frontier keeps
-    # the event log from shuffling once per hop
+    # most one next node, so per-hop dedup is redundant going up
     return expand(
         e.filter(F.col("_s").isNotNull() & F.col("_d").isNotNull()),
         root_ids,
@@ -510,7 +208,6 @@ def trace_causality(
         dst_col="_d",
         seed_col=id_col,
         dedup_per_hop=(direction == "down"),
-        broadcast_frontier=True,
     ).select(id_col, F.col("hop").alias("depth"))
 
 

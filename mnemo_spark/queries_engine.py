@@ -410,7 +410,7 @@ _BITEMPORAL_AS_OF = "2024-03-01 00:00:00"
     """,
 )
 def bitemporal_walk_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J4 bitemporal walk (operators/graph.py:121 expand_bitemporal;
+    """J4 bitemporal walk (operators/graph.expand_bitemporal;
     reference mnemo-graph/src/lib.rs:50-80): only edges whose validity
     interval contains the as-of instant participate — click edges
     expire after 30 days, purchase edges are open-ended. The validity
@@ -459,11 +459,8 @@ def lineage_ancestry_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint parent-pointer walk ≤8): each user's event stream is a
     parent-pointer chain (every event's parent is its predecessor);
     walking ≤8 hops from each head must return exactly the last ≤9
-    events — the oracle states that closed form, the Spark side walks
-    the pointers with the real `expand` operator (out_degree_1=True:
-    parent pointers are ≤1-out, so the walk binary-lifts to 3
-    self-joins instead of 8 sequential frontier stages — VERDICT r10
-    #4; byte-equivalence to the naive walk is pytest-gated)."""
+    events — the oracle states that closed form, and the Spark side
+    states it too, as one descending window per user (see below)."""
     # r13 (guide §1.1 first-principles, the same path-shortcut applied
     # to recall_batch_graph_docs this round): the parent-pointer graph
     # is a union of disjoint PATHS (each event's sole parent is its
@@ -473,9 +470,9 @@ def lineage_ancestry_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # that directly — the binary-lifted expand (3 self-joins + head
     # derivation + two extra windows) solved the general ≤1-out graph,
     # which this relation never is. The generic operator keeps its own
-    # gates (graph_expand_2hop, causality/delegation/bitemporal,
-    # test_graph_expand equivalence pytest). Byte-equality with the
-    # walk: hop = rd−1 matches min-hop-from-head, score = decay^hop,
+    # gates (graph_expand_2hop, causality/delegation/bitemporal, the
+    # BFS-reference property in tests/test_operators.py). Byte-equality
+    # with the walk: hop = rd−1 matches min-hop-from-head, score = decay^hop,
     # seeds (rd=1) at hop 0/score 1 — oracle-gated at three SFs.
     e = _t(spark, sf_dir, "events")
     wd = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))

@@ -360,13 +360,18 @@ def incremental_scan_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _TERMS_SQL = ", ".join(f"'{t}'" for t in P.BM25_QUERY_TERMS)
 
-# shared scored-BM25 CTE body (Robertson idf, k1/b from params) — the
-# SQL twin of operators.bm25.bm25_score, a one-query batch_bm25
-_BM25_CTES = f"""
+# BM25 corpus statistics shared by every SQL twin: a null-text doc
+# counts in N with dl 0, as in the Spark forms (DuckDB's avg would
+# skip its NULL length)
+_BM25_STATS = """
       tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
               FROM documents),
-      lens AS (SELECT doc_id, len(toks) AS dl FROM tok),
-      stats AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM lens),
+      lens AS (SELECT doc_id, coalesce(len(toks), 0) AS dl FROM tok),
+      stats AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM lens)"""
+
+# shared scored-BM25 CTE body (Robertson idf, k1/b from params) — the
+# SQL twin of operators.bm25.bm25_score, a one-query batch_bm25
+_BM25_CTES = f"""{_BM25_STATS},
       hits AS (SELECT doc_id, unnest(list_filter(toks, x -> x IN ({_TERMS_SQL}))) AS term
                FROM tok),
       tf AS (SELECT doc_id, term, count(*) AS tf FROM hits GROUP BY doc_id, term),
@@ -446,10 +451,7 @@ _BATCH_Q_SQL = ", ".join(
 @query(
     "batch_bm25_docs",
     f"""
-    WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-                 FROM documents),
-    lens AS (SELECT doc_id, len(toks) AS dl FROM tok),
-    stats AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM lens),
+    WITH {_BM25_STATS},
     q(query_id, term) AS (VALUES {_BATCH_Q_SQL}),
     terms AS (SELECT DISTINCT term FROM q),
     hits AS (SELECT t.doc_id, unnest(t.toks) AS term FROM tok t),

@@ -67,6 +67,42 @@ def _round6(x):
     return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
 
 
+def _bfs_reference(edges, seeds, hops=2, decay=0.5, visible=None, bidirectional=False):
+    """Plain-Python grouped BFS (recall.rs:479-555 graph lane).
+
+    edges: [(src, dst)]; seeds: [(group, id)]. Each group walks from
+    its own seeds with a seen-set, so a node's hop is its first visit
+    and seeds are hop 0. With `visible` (a set of ids) a node outside
+    it neither surfaces nor bridges; seeds stay. `bidirectional` also
+    walks every edge dst -> src. -> {(group, id, hop,
+    round(decay**hop, 6))}."""
+    adj: dict = {}
+    for s, d in edges:
+        adj.setdefault(s, set()).add(d)
+        if bidirectional:
+            adj.setdefault(d, set()).add(s)
+    out = set()
+    for g in {g for g, _ in seeds}:
+        seen = {i: 0 for gg, i in seeds if gg == g}
+        frontier = set(seen)
+        for hop in range(1, hops + 1):
+            frontier = {
+                d
+                for n in frontier
+                for d in adj.get(n, ())
+                if d not in seen and (visible is None or d in visible)
+            }
+            seen.update((d, hop) for d in frontier)
+        out |= {(g, i, hop, _round6(decay**hop)) for i, hop in seen.items()}
+    return out
+
+
+@pytest.fixture(scope="session")
+def bfs_reference():
+    """The plain-Python BFS every graph walk is checked against."""
+    return _bfs_reference
+
+
 def _bm25_reference(docs, query_terms, k1=1.2, b=0.75):
     """Plain-Python BM25 (Robertson-Spärck Jones idf, as in Tantivy).
 

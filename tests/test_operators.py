@@ -229,6 +229,59 @@ def test_bm25_matches_reference(spark, bm25_reference, monkeypatch, texts, queri
     )
 
 
+_node = st.integers(min_value=0, max_value=11)
+
+
+@given(
+    edges=st.lists(st.tuples(_node, _node), max_size=24),
+    seeds=st.lists(
+        st.tuples(st.sampled_from(["g1", "g2", "g3"]), _node), min_size=1, max_size=5
+    ),
+    visible=st.frozensets(_node),
+    hops=st.integers(min_value=0, max_value=4),
+)
+@RRF_SETTINGS
+def test_expand_matches_bfs_reference(spark, bfs_reference, edges, seeds, visible, hops):
+    """expand and expand_grouped walk like the plain-Python BFS on
+    graphs of ≤12 nodes with cycles, self-loops and duplicate edges,
+    1-3 groups and 0-4 hops, for every combination of dedup_per_hop ×
+    broadcast_edges × bidirectional × visible. `expand` is checked on
+    the first group's seeds (it takes no `visible`)."""
+    import itertools
+
+    from mnemo_spark.io import local_relation
+    from mnemo_spark.operators.graph import expand, expand_grouped
+
+    edf = local_relation(spark, edges, "src long, dst long")
+    sdf = local_relation(spark, seeds, "g string, id long")
+    vdf = local_relation(spark, [(v,) for v in visible], "id long")
+    g0 = seeds[0][0]
+    mine = [s for s in seeds if s[0] == g0]
+    one = sdf.filter(F.col("g") == g0).select("id")
+    # every combination's rows, tagged, in one union: one collect per
+    # example instead of 24
+    got, want = [], set()
+    for n, (dedup, bcast, bidir) in enumerate(itertools.product([True, False], repeat=3)):
+        kw = dict(
+            hops=hops, dedup_per_hop=dedup, broadcast_edges=bcast, bidirectional=bidir
+        )
+        for vis in (None, visible):
+            tag = f"{n}:{vis is None}"
+            got.append(
+                expand_grouped(
+                    edf, sdf, group_col="g", visible=None if vis is None else vdf, **kw
+                ).select(F.lit(tag).alias("tag"), "*")
+            )
+            want |= {(tag, *r) for r in bfs_reference(edges, seeds, hops, 0.5, vis, bidir)}
+        tag = f"{n}:expand"
+        got.append(expand(edf, one, **kw).select(F.lit(tag).alias("tag"), F.lit(g0), "*"))
+        want |= {(tag, *r) for r in bfs_reference(edges, mine, hops, 0.5, None, bidir)}
+    union = got[0]
+    for df in got[1:]:
+        union = union.unionAll(df)
+    assert {tuple(r) for r in union.collect()} == want
+
+
 def _rows(df, cols=None):
     cols = cols or df.columns
     return sorted(tuple(r[c] for c in cols) for r in df.collect())

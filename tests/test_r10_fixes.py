@@ -13,9 +13,10 @@ library mechanics rather than registry queries:
 - cache.clear() is a warn-and-no-op while a serving context is active
   (ADVICE r9 low) and the serving byte budget evicts oldest tracked
   entries instead of accumulating without bound (VERDICT r9 #5).
-- expand_grouped's driver-coordinated bounded walk is semantically
-  identical to the distributed lazy walk, and the bound fails loud
-  (VERDICT r9 #1).
+- expand_grouped walks like the plain-Python BFS reference, with and
+  without `visible`, and rejects a seeds frame without its group
+  column (the driver-coordinated bounded walk these ids first gated,
+  VERDICT r9 #1, is gone: there is one walk).
 - localize_small materializes a provably-bounded frame as a local
   relation with identical rows, and raises when the claimed bound
   does not hold.
@@ -186,57 +187,60 @@ def test_budget_evicts_oldest_tracked_entry(spark, sf_dir, monkeypatch):
         assert b.count() == 25
 
 
-# -- bounded grouped expansion ≡ distributed (VERDICT r9 #1) ------------
+# -- grouped expansion ≡ the BFS reference -----------------------------
+
+
+_TOY_EDGES = [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (2, 10)]
+_TOY_SEEDS = [("q1", 1), ("q1", 10), ("q2", 3)]
 
 
 def _toy_graph(spark):
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (2, 10)],
-        "src bigint, dst bigint",
-    )
-    seeds = spark.createDataFrame(
-        [("q1", 1), ("q1", 10), ("q2", 3)], "g string, id bigint"
-    )
+    edges = spark.createDataFrame(_TOY_EDGES, "src bigint, dst bigint")
+    seeds = spark.createDataFrame(_TOY_SEEDS, "g string, id bigint")
     return edges, seeds
 
 
 @pytest.mark.parametrize("bidir", [False, True])
-def test_expand_grouped_bounded_equivalence(spark, bidir):
+def test_expand_grouped_bounded_equivalence(spark, bfs_reference, bidir):
     from mnemo_spark.operators.graph import expand_grouped
 
     edges, seeds = _toy_graph(spark)
-    kw = dict(
-        hops=2, decay=0.5, group_col="g", seed_col="id", bidirectional=bidir
+    got = expand_grouped(
+        edges, seeds, hops=2, decay=0.5, group_col="g", seed_col="id",
+        bidirectional=bidir,
     )
-    lazy = _pdf(expand_grouped(edges, seeds, **kw))
-    bounded = _pdf(
-        expand_grouped(edges, seeds, local_frontier_bound=1000, **kw)
-    )
-    pd.testing.assert_frame_equal(lazy, bounded)
+    want = bfs_reference(_TOY_EDGES, _TOY_SEEDS, 2, 0.5, bidirectional=bidir)
+    assert {tuple(r) for r in got.collect()} == want
 
 
 def test_expand_grouped_bound_violation_raises(spark):
+    """The frontier-bound guard this id first checked went with the
+    driver-coordinated walk. What it checks now is the walk's input
+    contract: a seeds frame without `group_col` is rejected."""
+    from pyspark.errors import AnalysisException
+
     from mnemo_spark.operators.graph import expand_grouped
 
     edges, seeds = _toy_graph(spark)
-    with pytest.raises(ValueError, match="local_frontier_bound=1"):
+    with pytest.raises(AnalysisException):
         expand_grouped(
-            edges, seeds, hops=2, group_col="g", seed_col="id",
-            local_frontier_bound=1,
+            edges, seeds.select("id"), hops=2, group_col="g", seed_col="id"
         )
 
 
-def test_expand_grouped_bounded_respects_visibility(spark):
+def test_expand_grouped_bounded_respects_visibility(spark, bfs_reference):
     from mnemo_spark.operators.graph import expand_grouped
 
     edges, seeds = _toy_graph(spark)
     vis = spark.createDataFrame([(2,), (3,), (11,)], "id bigint")
-    kw = dict(hops=2, group_col="g", seed_col="id", visible=vis)
-    lazy = _pdf(expand_grouped(edges, seeds, **kw))
-    bounded = _pdf(
-        expand_grouped(edges, seeds, local_frontier_bound=1000, **kw)
+    got = expand_grouped(
+        edges, seeds, hops=2, group_col="g", seed_col="id", visible=vis
     )
-    pd.testing.assert_frame_equal(lazy, bounded)
+    want = bfs_reference(_TOY_EDGES, _TOY_SEEDS, 2, 0.5, visible={2, 3, 11})
+    assert {tuple(r) for r in got.collect()} == want
+    # 3 is reached through the visible 2; the invisible 12 and 4 are not
+    assert ("q1", 3, 2, 0.25) in want
+    assert not {r for r in want if r[1] in (4, 12)}
 
 
 # -- localize_small ------------------------------------------------------

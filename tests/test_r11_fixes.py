@@ -243,12 +243,11 @@ def test_batch_bm25_wide_equals_join_form(spark):
     assert 4 not in set(got["doc_id"])
 
 
-def test_expand_lifted_equals_naive_walk(spark):
-    """expand(out_degree_1=True) binary lifting must be byte-identical
-    to the naive per-hop walk on parent-pointer chains, including a
-    cycle (ring) and hops that are not a power of two."""
-    import pandas as pd
-
+def test_expand_lifted_equals_naive_walk(spark, bfs_reference):
+    """expand on parent-pointer chains, including a cycle (ring), a
+    lone seed and hops that are not a power of two, walks like the
+    plain-Python BFS with and without per-hop dedup. (The id once
+    gated the binary-lifting lane; the one walk replaced it.)"""
     from mnemo_spark.operators.graph import expand
 
     # two chains (one longer than hops), one 3-ring, one isolated seed
@@ -256,23 +255,17 @@ def test_expand_lifted_equals_naive_walk(spark):
     edges += [(f"d{i+1}", f"d{i}") for i in range(3)]
     edges += [("r0", "r1"), ("r1", "r2"), ("r2", "r0")]
     e = spark.createDataFrame(edges, "src string, dst string")
-    seeds = spark.createDataFrame(
-        [("c12",), ("d3",), ("r0",), ("lone",)], "id string"
-    )
-
-    def pdf(df) -> pd.DataFrame:
-        return (
-            df.toPandas().sort_values(["id"]).reset_index(drop=True)
-        )
+    seed_ids = ["c12", "d3", "r0", "lone"]
+    seeds = spark.createDataFrame([(i,) for i in seed_ids], "id string")
 
     for hops in (1, 2, 3, 5, 8):
-        naive = expand(e, seeds, hops=hops, decay=0.5, dedup_per_hop=False)
-        lifted = expand(e, seeds, hops=hops, decay=0.5, out_degree_1=True)
-        pd.testing.assert_frame_equal(
-            pdf(lifted), pdf(naive), obj=f"hops={hops}"
-        )
+        want = {
+            r[1:] for r in bfs_reference(edges, [(0, i) for i in seed_ids], hops, 0.5)
+        }
+        for dedup in (True, False):
+            got = expand(e, seeds, hops=hops, decay=0.5, dedup_per_hop=dedup)
+            assert {tuple(r) for r in got.collect()} == want, (hops, dedup)
     # sanity on the shape: 8 hops from c12 reaches c4..c12 (9 rows)
-    got = pdf(expand(e, seeds, hops=8, decay=0.5, out_degree_1=True))
-    c_rows = got[got["id"].str.startswith("c")]
-    assert len(c_rows) == 9
-    assert got[got["id"] == "lone"]["hop"].iloc[0] == 0
+    got = expand(e, seeds, hops=8, decay=0.5).collect()
+    assert len([r for r in got if r["id"].startswith("c")]) == 9
+    assert [r["hop"] for r in got if r["id"] == "lone"] == [0]

@@ -4,11 +4,11 @@
   empty-schema result instead of raising TypeError on float(None)
   (ADVICE r11 medium — reachable via recall_batch lexical/hybrid
   lanes on an empty memory store with a ≤4-query batch).
-- expand(out_degree_1=True) with hops < 1 returns seeds only, byte-
-  equivalent to the naive walk at the hops=0 boundary (ADVICE r11).
-- _expand_lifted's one-shot level pins release as soon as the final
-  reach relation materializes; the final pin is clear()-reclaimable
-  (ADVICE r11 — log2(hops) frames accumulated per call before).
+- expand and expand_grouped with hops < 1 return the seeds only
+  (ADVICE r11 found the binary-lifting lane returning 1-hop neighbours
+  at hops=0; that lane is gone).
+- outside a serving session a deep walk pins nothing (ADVICE r11 —
+  the binary-lifting lane's level pins once accumulated per call).
 - the EWMA alpha edge cases live in tests/test_baseline.py
   (test_ewma_alpha_edge_cases) and the overflow fix in
   test_ewma_chunked_survives_10k_windows.
@@ -66,22 +66,23 @@ def _chain_edges(spark, n=10):
 
 
 def test_expand_lifted_hops0_returns_seeds_only(spark):
-    from mnemo_spark.operators.graph import expand
+    from mnemo_spark.operators.graph import expand, expand_grouped
 
     edges = _chain_edges(spark)
     seeds = spark.createDataFrame([(5,), (9,)], "id long")
+    grouped = seeds.select(F.lit("q").alias("query_id"), "id")
     for hops in (0, -1):
-        naive = expand(edges, seeds, hops=hops).collect()
-        lifted = expand(edges, seeds, hops=hops, out_degree_1=True).collect()
-        key = lambda r: r["id"]  # noqa: E731
-        assert sorted(naive, key=key) == sorted(lifted, key=key), hops
-        assert {r["id"] for r in lifted} == {5, 9}
-        assert all(r["hop"] == 0 and r["score"] == 1.0 for r in lifted)
+        assert {tuple(r) for r in expand(edges, seeds, hops=hops).collect()} == {
+            (5, 0, 1.0), (9, 0, 1.0)
+        }, hops
+        got = {tuple(r) for r in expand_grouped(edges, grouped, hops=hops).collect()}
+        assert got == {("q", 5, 0, 1.0), ("q", 9, 0, 1.0)}, hops
 
 
 def test_expand_lifted_releases_level_pins(spark):
     from mnemo_spark.operators.graph import expand
 
+    assert not cache.serving_enabled()
     # fresh, unambiguous edge plan so its pins are attributable
     edges = _chain_edges(spark, 64).withColumn("salt", F.lit("r12-pin-test"))
     seeds = spark.createDataFrame([(63,),], "id long")
@@ -89,16 +90,10 @@ def test_expand_lifted_releases_level_pins(spark):
         return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
     before = pinned_ids()
-    out = expand(
-        edges.select("src", "dst"), seeds, hops=8, out_degree_1=True
-    )
-    out.collect()
-    mid = pinned_ids()
-    # 8 hops = 3 doubling levels; only the FINAL reach pin may remain
-    assert len(mid - before) <= 1, (before, mid)
-    cache.clear()
-    after = pinned_ids()
-    assert after - before == set(), (before, after)
+    out = expand(edges.select("src", "dst"), seeds, hops=8)
+    assert len(out.collect()) == 9
+    # outside serving the walk pins neither its edges nor its layers
+    assert pinned_ids() - before == set(), before
 
 
 def test_track_pin_reclaimed_by_clear(spark):

@@ -177,3 +177,41 @@ def test_query_runs(spark, sf_dir, name):
     assert df.columns, name
     if name in EXPECT_NONEMPTY:
         assert len(rows) > 0, f"{name} unexpectedly empty"
+
+
+def test_bm25_oracles_count_null_text_doc(spark, sf_dir, tmp_path):
+    """Every oracle that takes BM25's avgdl agrees with Spark on a
+    corpus with a null-text doc: the doc counts in N with dl 0 on both
+    sides (DuckDB's avg skips a NULL length, so the SQL coalesces it)."""
+    import os
+
+    import duckdb
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from mnemo_spark.io import TABLES, table_path
+    from tools.check_oracle import norm_rows
+
+    for t in TABLES:
+        if t != "documents":
+            os.symlink(table_path(sf_dir, t), table_path(str(tmp_path), t))
+    docs = pq.read_table(table_path(sf_dir, "documents"))
+    first = pc.equal(docs["doc_id"], pc.min(docs["doc_id"]))
+    text = pc.if_else(first, None, docs["text"])
+    docs = docs.set_column(docs.schema.get_field_index("text"), "text", text)
+    pq.write_table(docs, table_path(str(tmp_path), "documents"))
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM "
+            f"read_parquet('{table_path(str(tmp_path), t)}')"
+        )
+    names = sorted(n for n, sql in ORACLE.items() if "avgdl" in sql)
+    assert names
+    for name in names:
+        sdf = QUERIES[name](spark, str(tmp_path))
+        res = con.sql(ORACLE[name])
+        got = norm_rows([c.lower() for c in sdf.columns], [tuple(r) for r in sdf.collect()])
+        want = norm_rows([c.lower() for c in res.columns], res.fetchall())
+        assert got == want, name

@@ -1,144 +1,166 @@
-"""Serving-session memoized persist for shared intermediate frames.
-
-`cached_persist(df, *key)` returns `df` untouched unless a serving
-session is active (see `serving()` / `serving_enabled()`). When
-active, the frame is persisted ONCE per (session, input-plan semantic
-hash, key) and every later semantically-equal request returns the
-same persisted frame — so repeated queries over the same corpus reuse
-one materialization instead of leaking a fresh `persist()` per call
-(which evicts useful blocks and adds GC pressure as a long session
-accumulates them).
-
-Serving sessions have a FIRST-CLASS lifecycle (r9, VERDICT r8 #5 —
-previously only the MNEMO_CACHE_TABLES env var):
+"""One serving session per Spark application: every pin, value, table,
+prepared plan and broadcast the engine keeps resident between queries.
 
     with engine.serving():          # or mnemo_spark.cache.serving()
-        ... repeated queries ...    # shared intermediates tracked
-    # exit → clear(): every tracked persist released
+        ... repeated queries ...    # shared work built once, then reused
+    # exit → clear(): every session entry released
 
-The MNEMO_CACHE_TABLES=1 env var is kept as the process-wide form of
-the same switch (the bench harness sets it and calls `clear()`
-between runs); `serving()` is the scoped library surface. Everything
-that conditionally persists — `cached_persist` callers, the
-range-pin in operators/window_ops, graph expand's edge persist, the
-table reader — routes through `serving_enabled()`, so a context exit
-provably releases every block the session pinned
-(tests/test_serving_session.py asserts getPersistentRDDs drains).
+Outside a serving context nothing is memoized: `cached_persist` returns
+its frame untouched, `cached_value` / `session_value` rebuild per call
+and the table loaders read parquet afresh, so tests and the oracle see
+scan-level pushdown and nothing leaks. `MNEMO_CACHE_TABLES=1` is the
+process-wide form of the same switch (the bench harness sets it and
+calls `clear(force=True)` between runs).
 
-Thread safety (ADVICE r9): the serving depth and the cache are shared
-process state for the multi-engine / multi-threaded server scenario
-this feature targets, so both are guarded by one re-entrant lock, and
-`clear()` is a warn-and-no-op while ANY serving context is still
-active — an engine calling `release()` can no longer unpersist frames
-a sibling engine's open serving session is relying on. Pass
-`force=True` (or exit the last context) to actually drain.
+A `_Session` holds, for one applicationId:
+- `pins` — `cached_persist` frames, keyed by (input-plan semanticHash,
+  key parts), so semantically-equal requests share one materialization
+  instead of leaking a `persist()` per call. They are bounded by a byte
+  budget and evicted oldest-first (the reference's LRU record cache,
+  cache.rs:1-196);
+- `tables` — table and spread-table pins (`cached_table`), never evicted;
+- `oneshot` — `track_pin` handles of pins made outside serving, one per
+  distinct plan, so `clear()` can still reclaim them;
+- `values` — driver-side values (`cached_value`, `session_value`),
+  including the registry's prepared plans;
+- `broadcasts` — kernel broadcasts, the newest `_BROADCAST_LIMIT` kept.
 
-The key includes the SparkSession's applicationId: after a session
-restart in the same process a stale entry would hand back a DataFrame
-bound to a stopped session.
-
-Memory budget (VERDICT r9 #5): tracked persists use MEMORY_AND_DISK
-and are capped by a per-process byte budget — see `cached_persist`.
+Keying by applicationId means a frame bound to a stopped session is never
+handed to a restarted one. One re-entrant lock guards the serving depth
+and the sessions, for the multi-engine / multi-threaded server this
+targets; JVM work (analysis, persist, unpersist) runs outside it, so a
+hit never waits behind another thread's build. `clear()` is a
+warn-and-no-op while ANY serving context is open — an engine calling
+`release()` must not unpersist frames a sibling engine's open session
+relies on. `force=True` (or exiting the last context) drains.
 """
 
 from __future__ import annotations
 
 import contextlib
+import math
 import os
 import threading
 import warnings
 
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame
 
+# what a stopped or foreign Spark session raises, raw or converted
+JVM_ERRORS = (Py4JError, PySparkException)
+
+# the strong refs in `broadcasts` exist so serving exit can reclaim
+# EXECUTOR copies, but an unbounded list would also stop GC and the
+# ContextCleaner from reclaiming per-query broadcasts mid-session. Past
+# the cap the oldest handle is unpersisted (not destroyed: a running
+# plan that still reads it re-fetches from the driver) and dropped.
+_BROADCAST_LIMIT = 64
+
+
+class _Session:
+    """Everything resident for one applicationId (see module doc)."""
+
+    def __init__(self) -> None:
+        self.pins: dict[tuple, DataFrame] = {}  # insertion order = LRU
+        self.tables: dict[tuple, DataFrame] = {}
+        self.oneshot: dict[object, DataFrame] = {}
+        self.values: dict[tuple, object] = {}
+        self.broadcasts: list = []
+        self.warned = False  # over-budget warning given once per session
+
+    def handles(self) -> list:
+        return [
+            *self.pins.values(),
+            *self.tables.values(),
+            *self.oneshot.values(),
+            *self.broadcasts,
+        ]
+
+
 _LOCK = threading.RLock()
-_CACHE: dict[tuple, DataFrame] = {}
+_SESSIONS: dict[str | None, _Session] = {}
 _SERVING = 0  # nesting depth of active serving() contexts
-_BROADCASTS: list = []  # sc.broadcast handles created by kernels
-# cap on tracked broadcast handles held at once (ADVICE r10 medium):
-# the strong refs here exist so serving-exit can reclaim EXECUTOR
-# copies, but an unbounded list also BLOCKS Python GC / the
-# ContextCleaner from reclaiming per-query broadcasts mid-session —
-# the opposite of the bound the tracking promises. Beyond the cap the
-# OLDEST handle is unpersisted (blocking=False) and dropped: a
-# long-lived serving session holds at most N recent query matrices,
-# and any still-running plan that touches an evicted one re-fetches
-# from the driver (unpersist, not destroy — degrade-to-refetch).
-_BROADCAST_LIMIT = int(os.environ.get("MNEMO_BROADCAST_TRACK_LIMIT", "64"))
 
 
-def track_broadcast(bc) -> None:
-    """Register a sparkContext.broadcast created inside a query kernel
-    (the dense-lane query matrix, the IVF probe map) so serving-
-    session exit reclaims its EXECUTOR copies. Python's GC eventually
-    releases broadcasts, but a long-lived server whose plan caches
-    retain frames pins their closures indefinitely — this bounds that.
-    clear() calls bc.unpersist() (NOT destroy): executor blocks are
-    dropped, and any still-live plan that re-executes simply re-fetches
-    from the driver — degrade-to-refetch, never a poisoned plan.
-
-    The tracking list itself is BOUNDED at _BROADCAST_LIMIT entries
-    (ADVICE r10): past the cap the oldest handle is unpersisted and
-    dropped immediately, so a month-long serving session cannot
-    accumulate one pinned broadcast per query served."""
-    if not serving_enabled():
-        return  # short-lived process: broadcasts die with it
-    evicted = []
+def _session(app_id: str | None) -> _Session:
+    """The session of app_id, created on first use. Mutate what it
+    returns only under _LOCK, and look it up again there: `clear()`
+    may have dropped it meanwhile."""
     with _LOCK:
-        _BROADCASTS.append(bc)
-        while len(_BROADCASTS) > _BROADCAST_LIMIT:
-            evicted.append(_BROADCASTS.pop(0))
-    for old in evicted:  # blocking JVM work runs outside the lock
+        return _SESSIONS.setdefault(app_id, _Session())
+
+
+def _plan_key(df: DataFrame) -> tuple[str, int]:
+    return (
+        df.sparkSession.sparkContext.applicationId,
+        df._jdf.queryExecution().analyzed().semanticHash(),
+    )
+
+
+def _unpersist(handles, blocking: bool = False) -> None:
+    """Release frames and broadcasts; the blocks of a stopped session
+    died with it."""
+    for h in handles:
         try:
-            old.unpersist()
-        except Exception:  # noqa: BLE001 - session may be gone
+            if blocking:
+                h.unpersist(True)
+            else:
+                h.unpersist()
+        except JVM_ERRORS:
             pass
 
 
-# non-serving persist handles clear() reclaims, keyed by
-# (appId, plan semanticHash) so plan-equal repeats share ONE handle
-_ONESHOT_PINS: dict[tuple, DataFrame] = {}
+def track_broadcast(bc) -> None:
+    """Register a sparkContext.broadcast made inside a query kernel (the
+    dense-lane query matrix, the IVF probe map) so serving exit reclaims
+    its executor copies — a long-lived server whose prepared plans
+    retain frames would otherwise pin their closures indefinitely. At
+    most `_BROADCAST_LIMIT` are held; past it the oldest is unpersisted
+    at once."""
+    if not serving_enabled():
+        return  # short-lived process: broadcasts die with it
+    sc = getattr(bc, "_sc", None)
+    evicted = []
+    with _LOCK:
+        bcs = _session(sc.applicationId if sc is not None else None).broadcasts
+        bcs.append(bc)
+        while len(bcs) > _BROADCAST_LIMIT:
+            evicted.append(bcs.pop(0))
+    _unpersist(evicted)  # blocking JVM work runs outside the lock
 
 
 def track_pin(df: DataFrame, storage_level=None) -> DataFrame:
     """Persist df OUTSIDE a serving session but keep the handle where
-    `clear()` can reclaim it (ADVICE r11: a bare one-shot persist has
-    no release path for the life of the session). Spark's
-    CacheManager dedupes plan-equal persists; the handle registry
-    dedupes the same way — keyed on the plan's semantic hash (ADVICE
-    r12: an append-only list grew one Python handle per plan-equal
-    call for the process lifetime), so a long-lived non-serving
-    process holds one handle per DISTINCT pinned plan, reclaimed at
-    the next clear(). Callers that can bound a pin's lifetime
-    themselves (materialize-then-release) should unpersist directly
-    and skip the registry."""
+    `clear()` can reclaim it (a bare one-shot persist has no release
+    path for the life of the Spark session). Keyed on the plan's
+    semantic hash, as Spark's CacheManager dedupes plan-equal persists,
+    so a long-lived process holds one handle per DISTINCT pinned plan.
+    Callers that can bound a pin's lifetime themselves
+    (materialize-then-release) should unpersist directly."""
     try:
-        key = (
-            df.sparkSession.sparkContext.applicationId,
-            df._jdf.queryExecution().analyzed().semanticHash(),
-        )
-    except Exception:  # noqa: BLE001 - registry is best-effort
-        key = ("_unkeyed", id(df))
+        app_id, key = _plan_key(df)
+    except JVM_ERRORS:
+        app_id, key = None, id(df)
     with _LOCK:
-        _ONESHOT_PINS.setdefault(key, df)
+        _session(app_id).oneshot.setdefault(key, df)
     if storage_level is not None:
         return df.persist(storage_level)
     return df.persist()
 
 
 def serving_enabled() -> bool:
-    """True when shared intermediates should be persisted + tracked:
-    inside a `serving()` context, or process-wide under
-    MNEMO_CACHE_TABLES=1 (the bench harness's mode)."""
+    """True when shared work should be memoized: inside a `serving()`
+    context, or process-wide under MNEMO_CACHE_TABLES=1."""
     return _SERVING > 0 or os.environ.get("MNEMO_CACHE_TABLES", "") == "1"
 
 
 @contextlib.contextmanager
 def serving():
-    """Scoped serving session: persist-and-track shared intermediates
-    for the duration, release them all on exit. Re-entrant — only the
-    outermost exit clears (and a process-wide MNEMO_CACHE_TABLES=1
-    keeps the cache alive across context exits, since the bench
-    harness owns clearing in that mode)."""
+    """Scoped serving session: memoize shared work for the duration,
+    release it all on exit. Re-entrant — only the outermost exit
+    clears, and under MNEMO_CACHE_TABLES=1 the sessions outlive context
+    exits, since the bench harness owns clearing in that mode."""
     global _SERVING
     with _LOCK:
         _SERVING += 1
@@ -161,116 +183,133 @@ def cached_persist(
     compact: bool = False,
     max_parts: int | None = None,
 ) -> DataFrame:
-    """key_plan: hash THIS frame's plan instead of df's own. Needed
-    when df's lineage contains a Spark ML transform — every
-    Transformer instance wraps a fresh ScalaUDF whose canonical form
-    is NOT stable across rebuilds, so df.semanticHash() differs for
-    identical programs and the cache both misses and leaks a persisted
-    copy per call. Callers pass the pre-ML input projection (a stable
-    plan) plus key_parts that pin the transform's own parameters.
+    """Persist df once per (session, plan semanticHash, key_parts) while
+    serving; return df untouched otherwise.
+
+    key_plan: hash THIS frame's plan instead of df's own. Needed when
+    df's lineage contains a Spark ML transform — every Transformer
+    instance wraps a fresh ScalaUDF whose canonical form is NOT stable
+    across rebuilds, so df's hash differs for identical programs and
+    the cache both misses and leaks a persisted copy per call. Callers
+    pass the pre-ML input projection plus key_parts that pin the
+    transform's own parameters.
 
     compact=True sizes the cached layout to the DATA instead of to
-    spark.sql.shuffle.partitions (r10): a small index artifact (per-doc
+    spark.sql.shuffle.partitions: a small index artifact (per-doc
     stats, postings, an edge list) otherwise persists as 32 near-empty
-    blocks and every downstream scan schedules 32 near-empty tasks —
-    measured as the dominant per-call cost of the retrieval cluster at
-    local scale. Partition count = ceil(Catalyst size estimate /
-    64 MiB), capped at the current partitioning (narrow coalesce only,
-    never an extra shuffle); at 100 TB the same rule yields thousands
-    of partitions — this is the standard compact-the-index-segment
-    move, not a parallelism giveaway. Do NOT use for frames feeding
-    Arrow/Python folds (see session.py's parallelismFirst note).
+    blocks and every downstream scan schedules 32 near-empty tasks.
+    Partition count = ceil(true size / 64 MiB), capped at the current
+    partitioning (narrow coalesce only); at 100 TB the same rule yields
+    thousands of partitions. Do NOT use for frames feeding Arrow/Python
+    folds (see session.py's parallelismFirst note).
 
-    max_parts (r12) additionally caps the compact layout when the
-    CALLER knows the frame is small but Catalyst's estimate is
-    inflated (a write-path plan whose FlatMapGroupsInPandas/join
-    lineage inherits the child scan's size): a ~5 MB store cached as
-    34 near-empty blocks paid ~34 Python-worker round-trips per
-    mapInPandas kernel pass over it — measured as the dominant warm
-    cost of recall_routed_docs (1.12 s → 0.63 s at 8 parts)."""
+    max_parts additionally caps the compact layout when the CALLER
+    knows the frame is small but Catalyst's estimate is inflated (a
+    write-path plan whose FlatMapGroupsInPandas/join lineage inherits
+    the child scan's size): a ~5 MB store cached as 34 near-empty
+    blocks paid ~34 Python-worker round-trips per mapInPandas pass."""
     if not serving_enabled():
         return df
     try:
-        app_id = df.sparkSession.sparkContext.applicationId
-        src = key_plan if key_plan is not None else df
-        plan_hash = src._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:  # noqa: BLE001 - cache is best-effort
+        app_id, plan_hash = _plan_key(key_plan if key_plan is not None else df)
+    except JVM_ERRORS:
         return df
-    key = (app_id, plan_hash, *key_parts)
-    # the lock guards ONLY dict access (ADVICE-r9 follow-up): the
-    # JVM-heavy work — Catalyst stats in _size_coalesced, the persist
-    # + budget eviction in _pin — runs outside it, so a cache HIT (or
-    # an unrelated engine's serving() enter/exit) never blocks behind
-    # another thread's multi-second build. Two threads racing the same
-    # miss both build; the loser's pin is released and the winner's
-    # entry served — idempotent, at worst one duplicated build.
+    key = (plan_hash, *key_parts)
     with _LOCK:
-        hit = _CACHE.get(key)
+        hit = _session(app_id).pins.get(key)
     if hit is not None:
         return hit
-    from mnemo_spark.params import SERVING_CACHE_BUDGET_BYTES
+    from mnemo_spark import params as P
 
     if compact:
         df = _size_coalesced(df, max_parts=max_parts)
-    pinned = _pin(df, app_id, SERVING_CACHE_BUDGET_BYTES)
+    pinned = _pin(df, app_id, P.SERVING_CACHE_BUDGET_BYTES)
     with _LOCK:
-        existing = _CACHE.get(key)
-        if existing is None:
-            _CACHE[key] = pinned
-    if existing is not None:
-        # duplicate-build race: this thread lost. Spark's CacheManager
-        # uncaches by logical-plan EQUALITY, so when the loser's frame
-        # is semantically identical to the winner's, unpersisting it
-        # would drop the winner's just-pinned blocks too — and since
-        # hits return the stored handle without re-checking
-        # storageLevel, that key would silently serve full recompute
-        # for the rest of the session (ADVICE r10). Only unpersist
-        # when the plans genuinely differ (a key_plan caller whose ML
-        # lineage canonicalizes differently per build).
-        try:
-            same_plan = (
-                pinned._jdf.queryExecution().analyzed().semanticHash()
-                == existing._jdf.queryExecution().analyzed().semanticHash()
-            )
-        except Exception:  # noqa: BLE001 - when in doubt, keep blocks
-            same_plan = True
-        if not same_plan:
-            try:
-                pinned.unpersist()
-            except Exception:  # noqa: BLE001
-                pass
-        return existing
-    return pinned
+        existing = _session(app_id).pins.setdefault(key, pinned)
+    if existing is pinned:
+        return pinned
+    # Two threads raced the same miss; this one lost. CacheManager
+    # uncaches by logical-plan EQUALITY, so when the loser's frame is
+    # semantically identical to the winner's, unpersisting it would
+    # drop the winner's just-pinned blocks too — and since hits return
+    # the stored handle without re-checking storageLevel, that key
+    # would silently serve full recompute for the rest of the session.
+    # Only unpersist when the plans genuinely differ (a key_plan
+    # caller whose ML lineage canonicalizes differently per build).
+    try:
+        same_plan = _plan_key(pinned) == _plan_key(existing)
+    except JVM_ERRORS:
+        same_plan = True  # when in doubt, keep blocks
+    if not same_plan:
+        _unpersist([pinned])
+    return existing
 
 
-_VALUES: dict[tuple, object] = {}
+def _memo(app_id: str, kind: str, key: tuple, build):
+    """build() stored once under key in the `kind` store of app_id's
+    session. Two racing builders both run and the first store wins, so
+    `build` must be pure given the key."""
+    with _LOCK:
+        store = getattr(_session(app_id), kind)
+        if key in store:
+            return store[key]
+    val = build()
+    with _LOCK:
+        return getattr(_session(app_id), kind).setdefault(key, val)
+
+
+def session_value(spark, key: tuple, build):
+    """build() memoized under key in spark's session while serving;
+    rebuilt per call otherwise."""
+    if not serving_enabled():
+        return build()
+    return _memo(spark.sparkContext.applicationId, "values", key, build)
 
 
 def cached_value(build, *key_parts, key_plan: DataFrame):
     """Driver-side twin of cached_persist for corpus-only NON-frame
-    artifacts — an ANN codebook ndarray, a store row count (VERDICT
-    r11 #2: recall_routed_docs paid the codebook collect + Lloyd
-    refinement per execution because only FRAMES had a serving-cache
-    surface). Memoized per (appId, key_plan semantic hash, key) while
-    a serving session is active; rebuilt per call otherwise. The same
-    doctrine as cached_persist: these are statistics OF the corpus,
-    so a semantically-equal corpus plan may share them. Cleared by
-    clear(). `build` must be pure given the plan (no engine state) —
-    two racing builders both run and the first store wins."""
+    artifacts — an ANN codebook ndarray, a store row count — memoized
+    per (session, key_plan semanticHash, key_parts) while serving.
+    These are statistics OF the corpus, so a semantically-equal corpus
+    plan may share them; a store mutation changes the plan and so the
+    key."""
     if not serving_enabled():
         return build()
     try:
-        app_id = key_plan.sparkSession.sparkContext.applicationId
-        plan_hash = key_plan._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:  # noqa: BLE001 - cache is best-effort
+        app_id, plan_hash = _plan_key(key_plan)
+    except JVM_ERRORS:
         return build()
-    key = (app_id, plan_hash, *key_parts)
+    return _memo(app_id, "values", (plan_hash, *key_parts), build)
+
+
+def cached_table(spark, key: tuple, build) -> DataFrame:
+    """build() persisted once per (session, key) while serving, and
+    never evicted by the budget: the table loaders' scans. Returns
+    build() unpersisted otherwise. A racing plan-equal persist is a
+    no-op in Spark's CacheManager."""
+    if not serving_enabled():
+        return build()
+    return _memo(
+        spark.sparkContext.applicationId, "tables", key, lambda: build().persist()
+    )
+
+
+def drop_tables() -> None:
+    """Unpersist and drop every session's table pins, serving or not."""
     with _LOCK:
-        if key in _VALUES:
-            return _VALUES[key]
-    val = build()
+        frames = []
+        for s in _SESSIONS.values():
+            frames += s.tables.values()
+            s.tables = {}
+    _unpersist(frames)
+
+
+def drop_values(tag) -> None:
+    """Drop every session's values whose key starts with tag, serving
+    or not (the registry's prepared plans)."""
     with _LOCK:
-        return _VALUES.setdefault(key, val)
+        for s in _SESSIONS.values():
+            s.values = {k: v for k, v in s.values.items() if k[0] != tag}
 
 
 def _size_coalesced(
@@ -278,16 +317,11 @@ def _size_coalesced(
     target_bytes: int = 64 << 20,
     max_parts: int | None = None,
 ) -> DataFrame:
-    """Narrow-coalesce df to ceil(sizeInBytes estimate / target_bytes)
-    partitions when that is FEWER than its current partitioning.
+    """Narrow-coalesce df to ceil(size / target_bytes) partitions.
     Catalyst's estimate for post-aggregation plans inherits the child
     scan size — an overestimate, so the error direction keeps MORE
-    partitions than ideal (safe at scale, still a large win over
-    shuffle.partitions near-empty blocks locally). max_parts is the
-    caller's own knowledge overriding the estimate — see
-    cached_persist."""
-    import math
-
+    partitions than ideal. max_parts is the caller's own knowledge
+    overriding the estimate — see cached_persist."""
     try:
         est = int(
             str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
@@ -295,19 +329,17 @@ def _size_coalesced(
         parts = max(1, math.ceil(est / target_bytes))
         if max_parts is not None:
             parts = min(parts, max_parts)
-        # Cross-check the ESTIMATE against AQE's runtime answer (r13):
+        # Cross-check the ESTIMATE against AQE's runtime answer:
         # Catalyst's sizeInBytes for explode/agg lineages inflates by
         # orders of magnitude (the bm25 tf artifact: 85 KB true, ~274 GB
         # estimated → parts=4380, a no-op coalesce over 32 near-empty
         # blocks). df.rdd compiles the adaptive plan AND EXECUTES its
         # upstream shuffle stages — work the persisted df.coalesce()
         # plan does NOT reuse (exchange reuse never spans separate
-        # executions; ADVICE r13), so every compact-pin miss pays the
-        # upstream stages twice. Accepted once-per-pin cost for a
-        # partitioning sized to the TRUE bytes by the advisory size.
-        # Skipped when the plan is a bare scan/local relation (no
-        # shuffle stage exists for AQE to re-size — the estimate is
-        # file-size-based and already honest there).
+        # executions), so every compact-pin miss pays the upstream
+        # stages twice: an accepted once-per-pin cost for a layout sized
+        # to the TRUE bytes. Skipped for a bare scan / local relation,
+        # whose file-size-based estimate is already honest.
         try:
             plan = df._jdf.queryExecution().optimizedPlan().toString()
             has_stage = any(
@@ -317,64 +349,49 @@ def _size_coalesced(
             )
             if has_stage:
                 parts = min(parts, max(1, df.rdd.getNumPartitions()))
-        except Exception:  # noqa: BLE001 - probe is best-effort
+        except JVM_ERRORS:  # the probe is best-effort
             pass
-        # ALWAYS apply the narrow coalesce: the old `parts < current`
-        # guard compared against the AQE view (often already 1) — but a
+        # ALWAYS coalesce, even when df.rdd already reports `parts`: a
         # PERSISTED plan materializes WITHOUT AQE's output-partitioning
-        # changes (canChangeCachedPlanOutputPartitioning=false default),
-        # so the guard skipped the coalesce exactly when it was needed
-        # and the pin kept shuffle.partitions near-empty blocks
-        # (measured: the 200-row consent subject universe pinned as 32
-        # blocks; its 3-lane union scheduled 96 near-empty tasks per
-        # execution). coalesce never increases partition count, so this
-        # is a no-op when the layout is already at or below `parts`.
+        # changes (canChangeCachedPlanOutputPartitioning=false), so the
+        # pin would otherwise keep shuffle.partitions near-empty blocks
+        # (the 200-row consent subject universe pinned as 32 blocks;
+        # its 3-lane union scheduled 96 near-empty tasks per execution).
+        # coalesce never increases partition count.
         return df.coalesce(parts)
-    except Exception:  # noqa: BLE001 - layout tuning is best-effort
-        pass
-    return df
+    except JVM_ERRORS:  # layout tuning is best-effort
+        return df
 
 
 def _pin(df: DataFrame, app_id: str, budget_bytes: int) -> DataFrame:
-    """Persist df under the serving byte budget (VERDICT r9 #5): pins
-    use MEMORY_AND_DISK (an over-memory corpus spills instead of
-    OOMing — StorageLevel semantics, not this module's), and when the
-    session's TRACKED pinned bytes exceed `budget_bytes`, the
-    least-recently-pinned tracked entries are unpersisted (degrade to
-    recompute) until the new entry fits. Reference analog: the LRU
-    record cache's max_entries bound (cache.rs:1-196) — bounded reuse,
-    never unbounded accumulation. Takes _LOCK only around each dict
-    pop; the blocking unpersists run unlocked."""
+    """Persist df MEMORY_AND_DISK (an over-memory corpus spills instead
+    of OOMing) under the serving byte budget: while the Spark session's
+    cached bytes exceed `budget_bytes`, the oldest tracked pins of this
+    session are unpersisted (degrade to recompute); the new entry stays
+    — it is the hot one by definition. Bounded reuse, never unbounded
+    accumulation. budget_bytes <= 0 means unbounded."""
     from pyspark import StorageLevel
 
     pinned = df.persist(StorageLevel.MEMORY_AND_DISK)
-    if budget_bytes <= 0:  # 0 / negative = unbounded (opt out)
+    if budget_bytes <= 0:
         return pinned
     try:
         used = _cached_bytes(df.sparkSession)
         while used > budget_bytes:
-            # evict oldest-pinned tracked entries (dict preserves
-            # insertion order) until back under budget; the entry
-            # being added stays — it is the hot one by definition
-            victim = None
             with _LOCK:
-                for k in list(_CACHE):
-                    if k[0] == app_id:
-                        victim = _CACHE.pop(k)
-                        break
+                pins = _session(app_id).pins
+                victim = pins.pop(next(iter(pins))) if pins else None
             if victim is None:
                 break
-            try:
-                victim.unpersist(True)
-            except Exception:  # noqa: BLE001
-                pass
+            _unpersist([victim], blocking=True)
             used = _cached_bytes(df.sparkSession)
-        # warn AFTER the loop so the victims-exhausted break can't
-        # silently skip it (ADVICE r10): whether eviction ran dry or
-        # got partway, still-over-budget means untracked pins dominate
-        global _WARNED_OVER_BUDGET
-        if used > budget_bytes and not _WARNED_OVER_BUDGET:
-            _WARNED_OVER_BUDGET = True
+        # warn AFTER the loop so running out of victims can't skip it:
+        # still over budget means untracked pins dominate
+        with _LOCK:
+            s = _session(app_id)
+            warn = used > budget_bytes and not s.warned
+            s.warned = s.warned or warn
+        if warn:
             warnings.warn(
                 f"session cached bytes exceed the serving budget "
                 f"even after evicting tracked entries ({used} > "
@@ -383,36 +400,25 @@ def _pin(df: DataFrame, app_id: str, budget_bytes: int) -> DataFrame:
                 "scope serving() more narrowly",
                 stacklevel=3,
             )
-    except Exception:  # noqa: BLE001 - budget enforcement is best-effort
+    except JVM_ERRORS:  # budget enforcement is best-effort
         pass
     return pinned
 
 
-_WARNED_OVER_BUDGET = False
-
-
 def _cached_bytes(spark) -> int:
-    """Total memory+disk bytes of MATERIALIZED cached RDDs in the
-    session — the measurable form of 'what serving() has pinned'. A
+    """Memory+disk bytes of MATERIALIZED cached RDDs in the session. A
     pinned but not-yet-computed frame costs 0 until first use, so
-    enforcement happens on the next pin after materialization —
-    bounded-lag enforcement, the same contract as Spark's own storage
-    eviction."""
+    enforcement happens on the next pin after materialization — the
+    same bounded lag as Spark's own storage eviction."""
     infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
     return sum(i.memSize() + i.diskSize() for i in infos)
 
 
 def clear(force: bool = False) -> None:
-    """Unpersist every tracked frame and reset — the tracked
-    intermediates here plus the table cache (mnemo_spark.io) and the
-    prepared-plan cache (mnemo_spark.registry), so one release drains
-    everything a serving session pinned. A no-op (with a warning)
-    while any serving() context is still active unless force=True —
-    engine.release() must not yank blocks out from under a sibling
-    engine's open session (ADVICE r9). Safe to call with a stopped
-    session (unpersist failures are swallowed — the JVM-side blocks
-    die with the session anyway)."""
-    global _CACHE, _BROADCASTS, _ONESHOT_PINS, _VALUES
+    """Release every session: unpersist its pins, tables, one-shot pins
+    and broadcasts, drop its values and plans. A no-op (with a warning)
+    while any serving() context is still active unless force=True.
+    Safe with a stopped Spark session."""
     with _LOCK:
         if _SERVING > 0 and not force:
             warnings.warn(
@@ -421,23 +427,7 @@ def clear(force: bool = False) -> None:
                 stacklevel=2,
             )
             return
-        frames, _CACHE = list(_CACHE.values()), {}
-        frames += list(_ONESHOT_PINS.values())
-        _ONESHOT_PINS = {}
-        _VALUES = {}
-        bcs, _BROADCASTS = list(_BROADCASTS), []
-    for frame in frames:
-        try:
-            frame.unpersist()
-        except Exception:  # noqa: BLE001 - session may be gone
-            pass
-    for bc in bcs:
-        try:
-            bc.unpersist()
-        except Exception:  # noqa: BLE001 - session may be gone
-            pass
-    from mnemo_spark.io import clear_table_cache
-    from mnemo_spark.registry import clear_plan_cache
-
-    clear_plan_cache()
-    clear_table_cache()
+        sessions = list(_SESSIONS.values())
+        _SESSIONS.clear()
+    for s in sessions:
+        _unpersist(s.handles())

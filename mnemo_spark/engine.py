@@ -2815,16 +2815,16 @@ class MnemoSparkEngine:
         }
 
     def serving(self):
-        """Scoped serving session (VERDICT r8 #5 — the first-class form
-        of the MNEMO_CACHE_TABLES switch): inside the context, shared
-        intermediates (range-pin exchanges, graph edge frames, BM25
-        postings, table scans, prepared plans) persist ONCE and are
-        reused across repeated queries; the context exit releases every
-        tracked block.
+        """Scoped serving session: inside the context, shared work —
+        range-pin exchanges, graph edge frames, BM25 postings, table
+        scans, corpus values, prepared plans, kernel broadcasts — is
+        built ONCE and reused across repeated queries, held by the one
+        per-application session in mnemo_spark.cache; the context exit
+        releases all of it.
 
             with engine.serving():
                 engine.recall_batch(...)   # repeated calls share work
-            # ← all persisted intermediates released here
+            # ← every session entry released here
 
         Re-entrant; see mnemo_spark.cache.serving()."""
         from mnemo_spark import cache
@@ -2832,12 +2832,12 @@ class MnemoSparkEngine:
         return cache.serving()
 
     def release(self, force: bool = False) -> None:
-        """Explicitly drop every tracked persisted intermediate (the
-        imperative form of exiting `serving()`); safe to call anytime.
-        While ANY serving() context is still active (this engine's or
-        a sibling engine's on the same SparkSession) this warns and
-        does nothing — releasing would unpersist frames the open
-        session relies on (ADVICE r9). force=True overrides."""
+        """Drop everything the serving session holds (the imperative
+        form of exiting `serving()`); safe to call anytime. While ANY
+        serving() context is still active (this engine's or a sibling
+        engine's on the same SparkSession) this warns and does nothing
+        — releasing would unpersist frames the open session relies on.
+        force=True overrides."""
         from mnemo_spark import cache
 
         cache.clear(force=force)

@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
 
+from mnemo_spark import cache
+
 TABLES = (
     "region",
     "nation",
@@ -32,24 +34,18 @@ TABLES = (
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
-# MNEMO_CACHE_TABLES=1 memoizes + persists every table frame for the
-# life of the session. The bench harness sets it so 40 queries decode
-# each parquet file once instead of 40 times — the same role DuckDB's
+# Inside a serving session (`cache.serving()` or MNEMO_CACHE_TABLES=1)
+# every table frame is persisted once per session, as a never-evicted
+# `tables` entry of the session in mnemo_spark.cache: 40 queries then
+# decode each parquet file once instead of 40 times — the role DuckDB's
 # buffer pool plays on the oracle side. Off by default: tests assert
 # scan-level pushdown/pruning, which an InMemoryTableScan would mask.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def clear_table_cache() -> None:
-    """Unpersist and drop every memoized table frame (bench harness
-    calls this between runs; also makes session restarts safe)."""
-    global _TABLE_CACHE
-    for frame in _TABLE_CACHE.values():
-        try:
-            frame.unpersist()
-        except Exception:  # noqa: BLE001 - session may be stopped
-            pass
-    _TABLE_CACHE = {}
+    """Unpersist and drop every session's table frames (the bench
+    harness calls this between runs)."""
+    cache.drop_tables()
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -59,14 +55,12 @@ def table_path(sf_dir: str, name: str) -> str:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
-    from mnemo_spark import cache
+    return cache.cached_table(
+        spark, (sf_dir, name), lambda: _read_table(spark, sf_dir, name)
+    )
 
-    caching = cache.serving_enabled()
-    # applicationId in the key: a cached frame from a stopped session
-    # must never be handed to a restarted one
-    cache_key = (spark.sparkContext.applicationId, sf_dir, name)
-    if caching and cache_key in _TABLE_CACHE:
-        return _TABLE_CACHE[cache_key]
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         # events.parquet is TIMESTAMP(NANOS), which Spark 4 refuses by
         # default; must be set BEFORE the read, and must not rely on
@@ -88,9 +82,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for field in df.schema.fields:
         if isinstance(field.dataType, TimestampNTZType):
             df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
-    if caching:
-        df = df.persist()
-        _TABLE_CACHE[cache_key] = df
     return df
 
 
@@ -115,22 +106,15 @@ def spread_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     skipped entirely when the natural scan already has >= that many
     splits — at 100 TB this twin is the identity."""
     df = load_table(spark, sf_dir, name)
-    from mnemo_spark import cache
-
     cores = spark.sparkContext.defaultParallelism
     try:
         if df.rdd.getNumPartitions() >= cores:
             return df
-    except Exception:  # noqa: BLE001 - layout probe is best-effort
+    except cache.JVM_ERRORS:  # layout probe is best-effort
         return df
-    if not cache.serving_enabled():
-        return df.repartition(cores)
-    cache_key = (spark.sparkContext.applicationId, sf_dir, name, "spread")
-    if cache_key in _TABLE_CACHE:
-        return _TABLE_CACHE[cache_key]
-    spread = df.repartition(cores).persist()
-    _TABLE_CACHE[cache_key] = spread
-    return spread
+    return cache.cached_table(
+        spark, (sf_dir, name, "spread"), lambda: df.repartition(cores)
+    )
 
 
 def repartition_for_fold(df: DataFrame, *part_cols: str) -> DataFrame:

@@ -261,10 +261,9 @@ def rrf_fuse_grouped(
                 ),
                 *[F.col(c) for c in carry_cols],
             )
-            if cache.serving_enabled():
-                top = cache.cached_persist(
-                    top, "rrf_global_lane", name, lane_limit, compact=True
-                )
+            top = cache.cached_persist(
+                top, "rrf_global_lane", name, lane_limit, compact=True
+            )
             # replicate the BOUNDED rows per group BEFORE the shared
             # rank window — the window re-derives identical per-group
             # ranks (truncation preserves order), and the lane joins

@@ -303,8 +303,7 @@ def mesh_policy_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the broadcast. Same doctrine as the consent subject pin.
     from mnemo_spark import cache
 
-    if cache.serving_enabled():
-        rules = cache.cached_persist(rules, "mesh_rules", compact=True)
+    rules = cache.cached_persist(rules, "mesh_rules", compact=True)
     decided = authorize_ops(ops.drop("user_id"), rules)
     return decided.groupBy("op", "decision").agg(F.count("*").alias("n"))
 

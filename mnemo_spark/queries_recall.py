@@ -156,50 +156,30 @@ _BATCH_Q_SQL = ", ".join(
 _BUCKET = f"CAST(('0x' || substr(md5(t), 1, 6))::BIGINT % {P.HASHBAG_DIM} AS INT)"
 _OVERFETCH = P.RECALL_LANE_OVERFETCH * P.RECALL_LIMIT
 
-# Handle memo for the batch per-doc stats frame (r10): the
-# perdoc_stats_multi PLAN carries nq dense 256-literal arrays, so just
-# ANALYZING it (cached_persist's semanticHash key) costs ~0.3 s of
-# driver CPU per call. The persisted blocks are tracked/drained by the
-# serving cache as before; this only memoizes the DataFrame handle per
-# (session, sf_dir) so repeated calls skip plan re-analysis. The memo
-# also records whether the handle was PINNED when built: a handle from
-# a serving-disabled first call (or one whose pin was dropped by
-# cache.clear()) is rebuilt on the next serving-enabled call instead
-# of silently reverting every later batch to a full corpus pass.
-_PERDOC_HANDLES: dict[tuple[str, str], DataFrame] = {}
-
-
 def _batch_perdoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared wide per-doc stats artifact for the fixed query
     batch (recall_batch_docs + recall_batch_graph_docs): per-doc token
     stats, per-term tf, one dot column per query — one corpus pass,
-    cached compactly under the serving cache."""
-    from mnemo_spark.cache import serving_enabled
+    cached compactly under the serving cache. Its plan carries nq dense
+    256-literal arrays, so analysing it for the cache key costs ~0.3 s
+    of driver CPU; the prepared-plan cache builds each of the two
+    queries once per session, so that is paid twice per session."""
+    from mnemo_spark.cache import cached_persist
+    from mnemo_spark.operators.recall_core import (
+        perdoc_stats_multi,
+        query_hash_bag_weights,
+    )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _PERDOC_HANDLES.get(key)
-    if df is not None and serving_enabled() and not df.storageLevel.useMemory:
-        # pin lost (built cold, or clear() ran): re-enter cached_persist
-        df = None
-    if df is None:
-        from mnemo_spark.cache import cached_persist
-        from mnemo_spark.operators.recall_core import (
-            perdoc_stats_multi,
-            query_hash_bag_weights,
-        )
-
-        docs = _t(spark, sf_dir, "documents")
-        terms = sorted({t for _, ts in _BATCH_QUERIES for t in ts})
-        qws = {qid: query_hash_bag_weights(ts) for qid, ts in _BATCH_QUERIES}
-        df = cached_persist(
-            perdoc_stats_multi(docs, terms, qws),
-            "recall_batch_perdoc",
-            tuple(terms),
-            tuple(sorted(qws)),
-            compact=True,
-        )
-        _PERDOC_HANDLES[key] = df
-    return df
+    docs = _t(spark, sf_dir, "documents")
+    terms = sorted({t for _, ts in _BATCH_QUERIES for t in ts})
+    qws = {qid: query_hash_bag_weights(ts) for qid, ts in _BATCH_QUERIES}
+    return cached_persist(
+        perdoc_stats_multi(docs, terms, qws),
+        "recall_batch_perdoc",
+        tuple(terms),
+        tuple(sorted(qws)),
+        compact=True,
+    )
 
 
 @query(
@@ -529,9 +509,9 @@ def recall_batch_graph_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partition, and min-hop first-visit dedup is a groupBy min over
     # the seed × offset rows. One fully LAZY plan, zero driver
     # round-trips — which is also what re-enables the prepared-plan
-    # cache (plan_cache default) that every other query already uses:
-    # with no eager build step there is nothing result-shaped to
-    # memoize, the cached object is a plan that re-executes per call.
+    # cache that every other query already uses: with no eager build
+    # step there is nothing result-shaped to memoize, the cached
+    # object is a plan that re-executes per call.
     # The seeds subtree is referenced by both lanes and recomputes
     # twice per execution — two cheap passes over the cached per-doc
     # frame, traded for the collect job and its driver sync. The
@@ -566,8 +546,7 @@ def recall_batch_graph_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from mnemo_spark import cache
 
-    if cache.serving_enabled():
-        nb = cache.cached_persist(nb, "lead_graph_neighbors", compact=True)
+    nb = cache.cached_persist(nb, "lead_graph_neighbors", compact=True)
     reached = seeds.select("query_id", "doc_id", F.lit(0).alias("hop")).unionByName(
         F.broadcast(seeds.select("query_id", F.col("doc_id").alias("src")))
         .join(nb, "src")

@@ -18,6 +18,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mnemo_spark import cache
 from mnemo_spark import params as P
 from mnemo_spark.functions.decay import ebbinghaus_score, recency_score
 from mnemo_spark.io import load_table, local_frame
@@ -34,49 +35,33 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
 
-# Prepared-query cache (serving mode only, same switch as the table
-# cache): re-invoking a registry query re-pays ~0.5-1.5s of driver-side
-# plan construction + analysis — thousands of Py4J round trips plus
-# Catalyst passes over a deep operator tree — for a plan that is
-# byte-identical every time. A resident engine compiles once and
-# serves many; memoizing the built DataFrame per (session, sf_dir,
-# query) is the relational analog of the reference's prepared
-# statements + resident index handles. DataFrames are immutable, so
-# sharing the object is safe; keyed by applicationId so a stopped
-# session never leaks plans into a restarted one. Default OFF so tests
-# and one-shot runs always exercise a fresh build.
-_PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+# Prepared-query cache: re-invoking a registry query re-pays ~0.5-1.5s
+# of driver-side plan construction + analysis — thousands of Py4J round
+# trips plus Catalyst passes over a deep operator tree — for a plan that
+# is byte-identical every time. Inside a serving session the built
+# DataFrame is a session value of mnemo_spark.cache, keyed by
+# (_PLAN, sf_dir, query): the relational analog of the reference's
+# prepared statements + resident index handles. DataFrames are
+# immutable, so sharing the object is safe. Outside serving, tests and
+# one-shot runs always exercise a fresh build.
+_PLAN = "plan"
 
 
 def clear_plan_cache() -> None:
     """Drop every prepared plan (no persisted blocks of its own — the
-    frames reference tracked/table caches, which clear separately)."""
-    _PLAN_CACHE.clear()
+    frames reference session pins and tables, which clear separately)."""
+    cache.drop_values(_PLAN)
 
 
-def query(name: str, sql: str | None = None, plan_cache: bool = True):
-    """plan_cache=False opts a query out of prepared-plan memoization:
-    required for queries whose BUILD step runs eager Spark jobs (e.g.
-    a driver-coordinated graph expansion) — memoizing those would
-    memoize per-call RESULTS, not a plan, and a repeated-call benchmark
-    would silently measure a dict lookup (r10)."""
-
+def query(name: str, sql: str | None = None):
     def deco(fn: QueryFn) -> QueryFn:
         import functools
-        import os
 
         @functools.wraps(fn)
         def serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-            from mnemo_spark import cache
-
-            if not cache.serving_enabled() or not plan_cache:
-                return fn(spark, sf_dir)
-            key = (spark.sparkContext.applicationId, sf_dir, name)
-            df = _PLAN_CACHE.get(key)
-            if df is None:
-                df = fn(spark, sf_dir)
-                _PLAN_CACHE[key] = df
-            return df
+            return cache.session_value(
+                spark, (_PLAN, sf_dir, name), lambda: fn(spark, sf_dir)
+            )
 
         QUERIES[name] = serve
         if sql is not None:

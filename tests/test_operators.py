@@ -681,18 +681,19 @@ def test_global_cumsum_ntile_serving_pin_is_tracked_and_released(spark):
     )
     os.environ["MNEMO_CACHE_TABLES"] = "1"
     try:
-        n_before = len(cache._CACHE)
+        app_id = spark.sparkContext.applicationId
+        n_before = len(cache._session(app_id).pins)
         out = global_cumsum(df, [F.asc("k")], "v", "cum", num_partitions=4)
         out = global_ntile(out, [F.desc("cum"), F.asc("k")], 3, "t",
                            num_partitions=4)
         assert out.count() == 50
         # both pins registered in the tracked cache...
-        assert len(cache._CACHE) >= n_before + 2
+        assert len(cache._session(app_id).pins) >= n_before + 2
     finally:
         os.environ.pop("MNEMO_CACHE_TABLES", None)
         cache.clear()
     # ...and clear() released them
-    assert len(cache._CACHE) == 0
+    assert len(cache._session(app_id).pins) == 0
 
 
 def test_global_ntile_matches_builtin_ntile(spark):

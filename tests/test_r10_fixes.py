@@ -155,13 +155,14 @@ def test_clear_noop_while_serving_active(spark, sf_dir):
             _t(spark, sf_dir, "region").select("r_regionkey"), "r10_test_a"
         )
         df.count()
-        assert len(cache._CACHE) >= 1
+        app_id = spark.sparkContext.applicationId
+        assert len(cache._session(app_id).pins) >= 1
         with pytest.warns(UserWarning, match="serving context"):
             cache.clear()  # refused: a serving context is open
-        assert len(cache._CACHE) >= 1  # nothing drained
+        assert len(cache._session(app_id).pins) >= 1  # nothing drained
         cache.clear(force=True)  # explicit override drains
-        assert len(cache._CACHE) == 0
-    assert len(cache._CACHE) == 0
+        assert len(cache._session(app_id).pins) == 0
+    assert len(cache._session(app_id).pins) == 0
 
 
 def test_budget_evicts_oldest_tracked_entry(spark, sf_dir, monkeypatch):
@@ -171,17 +172,18 @@ def test_budget_evicts_oldest_tracked_entry(spark, sf_dir, monkeypatch):
     from mnemo_spark.registry import _t
 
     monkeypatch.setattr(P, "SERVING_CACHE_BUDGET_BYTES", 1)
-    monkeypatch.setattr(cache, "_WARNED_OVER_BUDGET", True)  # quiet
+    app_id = spark.sparkContext.applicationId
     with cache.serving():
+        cache._session(app_id).warned = True  # quiet
         a = cache.cached_persist(
             _t(spark, sf_dir, "region").select("r_regionkey"), "r10_bud_a"
         )
         a.count()  # materialize so its bytes are visible to the budget
-        key_a = next(k for k in cache._CACHE if "r10_bud_a" in k)
+        key_a = next(k for k in cache._session(app_id).pins if "r10_bud_a" in k)
         b = cache.cached_persist(
             _t(spark, sf_dir, "nation").select("n_nationkey"), "r10_bud_b"
         )
-        assert key_a not in cache._CACHE, "older entry not evicted"
+        assert key_a not in cache._session(app_id).pins, "older entry not evicted"
         # the evicted frame still computes correctly (recompute path)
         assert a.count() == 5
         assert b.count() == 25
@@ -285,9 +287,9 @@ def test_track_broadcast_reclaimed_on_clear(spark):
     with cache.serving():
         bc = spark.sparkContext.broadcast([1, 2, 3])
         cache.track_broadcast(bc)
-        assert cache._BROADCASTS
+        assert cache._session(spark.sparkContext.applicationId).broadcasts
     # context exit drained the tracked list
-    assert not cache._BROADCASTS
+    assert not any(s.broadcasts for s in cache._SESSIONS.values())
     # unpersisted, not destroyed: value still readable (driver copy)
     assert bc.value == [1, 2, 3]
 
@@ -297,4 +299,4 @@ def test_track_broadcast_noop_outside_serving(spark):
 
     bc = spark.sparkContext.broadcast([4])
     cache.track_broadcast(bc)
-    assert bc not in cache._BROADCASTS
+    assert all(bc not in s.broadcasts for s in cache._SESSIONS.values())

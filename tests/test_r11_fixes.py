@@ -36,14 +36,15 @@ class _FakeBroadcast:
 
 def test_track_broadcast_bounded(monkeypatch):
     monkeypatch.setattr(cache, "_BROADCAST_LIMIT", 3)
-    monkeypatch.setattr(cache, "_BROADCASTS", [])
+    monkeypatch.setattr(cache, "_SESSIONS", {})
     bcs = [_FakeBroadcast() for _ in range(5)]
     with cache.serving():
         for bc in bcs:
             cache.track_broadcast(bc)
         # only the 3 newest are retained; the 2 oldest were reclaimed
         # immediately, NOT held until serving exit
-        assert cache._BROADCASTS == bcs[2:]
+        [session] = cache._SESSIONS.values()
+        assert session.broadcasts == bcs[2:]
         assert [b.unpersisted for b in bcs] == [True, True, False, False, False]
     # serving exit reclaims the remainder
     assert all(b.unpersisted for b in bcs)
@@ -58,7 +59,7 @@ def test_duplicate_build_race_keeps_winner_blocks(spark, monkeypatch):
     """Force the cached_persist duplicate-build race with a barrier:
     both threads miss, both pin; the loser must NOT drop the winner's
     just-persisted blocks (plans are semantically equal)."""
-    monkeypatch.setattr(cache, "_CACHE", {})
+    monkeypatch.setattr(cache, "_SESSIONS", {})
     barrier = threading.Barrier(2, timeout=30)
     real_pin = cache._pin
 
@@ -88,7 +89,8 @@ def test_duplicate_build_race_keeps_winner_blocks(spark, monkeypatch):
             results[0]._jdf.queryExecution().analyzed().semanticHash()
             == results[1]._jdf.queryExecution().analyzed().semanticHash()
         )
-        winner = cache._CACHE[next(iter(cache._CACHE))]
+        pins = cache._session(spark.sparkContext.applicationId).pins
+        winner = pins[next(iter(pins))]
         # the winner's entry is still pinned (the loser's unpersist was
         # skipped) — storage level retains memory AND a recount finds
         # materialized blocks
@@ -100,8 +102,8 @@ def test_duplicate_build_race_keeps_winner_blocks(spark, monkeypatch):
 def test_budget_warning_fires_when_victims_exhausted(spark, monkeypatch):
     """Over budget with no tracked victims left → the warning still
     fires (the r10 rewrite's break could skip it)."""
-    monkeypatch.setattr(cache, "_WARNED_OVER_BUDGET", False)
-    monkeypatch.setattr(cache, "_CACHE", {})  # nothing tracked to evict
+    # a fresh session: not yet warned, nothing tracked to evict
+    monkeypatch.setattr(cache, "_SESSIONS", {})
     # pin an UNTRACKED frame so session cached bytes are > 1
     anchor = spark.range(10_000).selectExpr("id", "id * 3 AS v").persist()
     anchor.count()

@@ -268,10 +268,10 @@ def test_cached_persist_keyed_by_session_and_clearable(spark, monkeypatch):
     a = cache.cached_persist(df, "unit")
     b = cache.cached_persist(spark.range(10), "unit")
     assert a is b  # semantically-equal plan + same session + same key
-    key = next(iter(cache._CACHE))
-    assert key[0] == spark.sparkContext.applicationId
+    # keyed by the session: the frame lives in this application's entry
+    assert a in cache._SESSIONS[spark.sparkContext.applicationId].pins.values()
     cache.clear()
-    assert cache._CACHE == {}
+    assert cache._SESSIONS == {}
     assert a.storageLevel.useMemory is False  # actually unpersisted
 
 

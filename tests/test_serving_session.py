@@ -7,6 +7,7 @@ own bookkeeping."""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from mnemo_spark import cache
@@ -22,12 +23,15 @@ def _pdf(df) -> pd.DataFrame:
 
 def test_serving_releases_all_pinned_blocks(spark, sf_dir):
     """Run the cache-hungriest operators (range-pin windows, graph
-    expand edge persist, batch BM25 postings, table scans) inside a
-    serving session; on exit no NEW persistent RDD may remain."""
+    expand edge persist, batch BM25 postings, table scans, a spread
+    table, a prepared registry query with its per-doc pin) inside a
+    serving session; on exit no NEW persistent RDD may remain and the
+    serving session holds no entry of any kind."""
+    from mnemo_spark import io
     from mnemo_spark.operators.bm25 import batch_bm25
     from mnemo_spark.operators.graph import expand
     from mnemo_spark.operators.window_ops import global_cumsum, global_ntile
-    from mnemo_spark.registry import _t
+    from mnemo_spark.registry import QUERIES, _t
 
     before = _persisted_ids(spark)
 
@@ -56,11 +60,17 @@ def test_serving_releases_all_pinned_blocks(spark, sf_dir):
             "query_id string, terms array<string>",
         )
         bm = batch_bm25(docs, queries, id_col="doc_id", text_col="text")
+        rb = QUERIES["recall_batch_docs"](spark, sf_dir)
+        sp = io.spread_table(spark, sf_dir, "documents").agg(
+            F.count("*").alias("n"), F.sum("doc_id").alias("s")
+        )
         return {
             "cum": _pdf(cum),
             "nt": _pdf(nt),
             "ex": _pdf(ex),
             "bm": _pdf(bm),
+            "rb": _pdf(rb),
+            "sp": _pdf(sp),
         }
 
     with cache.serving():
@@ -69,12 +79,22 @@ def test_serving_releases_all_pinned_blocks(spark, sf_dir):
         assert _persisted_ids(spark) - before, "serving session pinned nothing"
     after = _persisted_ids(spark)
     assert after - before == set(), f"leaked persistent RDDs: {after - before}"
+    assert cache._SESSIONS == {}, "serving exit left session entries"
 
     # one-shot mode produces identical results (plain persists there
     # are plan-deduped, not tracked — bounded, documented posture)
     oneshot = run_all()
     for k in served:
         pd.testing.assert_frame_equal(served[k], oneshot[k])
+
+
+def test_cached_persist_raises_on_non_frame(spark):
+    """Only what a stopped or foreign Spark session raises is swallowed
+    by the serving cache; a caller's bug (here: not a DataFrame at all)
+    surfaces instead of being returned unpinned."""
+    with cache.serving():
+        with pytest.raises(AttributeError):
+            cache.cached_persist(object(), "k")
 
 
 def test_cached_value_rebuilds_on_store_mutation(spark):
@@ -168,12 +188,13 @@ def test_engine_serving_roundtrip(spark):
 
 def test_track_pin_dedupes_plan_equal(spark):
     cache.clear()
-    n0 = len(cache._ONESHOT_PINS)
+    app_id = spark.sparkContext.applicationId
+    n0 = len(cache._session(app_id).oneshot)
     for _ in range(5):
         df = spark.range(100).withColumn("v", F.col("id") * 2)
         cache.track_pin(df).count()
         df.unpersist()
-    assert len(cache._ONESHOT_PINS) == n0 + 1
+    assert len(cache._session(app_id).oneshot) == n0 + 1
     cache.clear()
 
 
